@@ -2111,6 +2111,7 @@ def x4_rrf_fusion(spark, sf_dir):
     from eco_pulse_lakehouse_spark.operators.retrieval import (
         bm25_from_postings,
         bm25_shared_stats,
+        query_terms,
         rrf_fuse,
         term_overlap_from_postings,
         term_postings,
@@ -2125,10 +2126,7 @@ def x4_rrf_fusion(spark, sf_dir):
     # scans). term_overlap_topk IS term_overlap_from_postings over
     # term_postings (retrieval.py:249), so the fusion input — and
     # the oracle-checked output — is unchanged row for row.
-    q_terms = spark.createDataFrame(
-        [(qid, t) for qid, qtext in _BM25_QUERIES for t in qtext.split(" ")],
-        "query_id long, term string",
-    ).distinct()
+    q_terms = query_terms(spark, _BM25_QUERIES)
     postings = term_postings(d, "doc_id", "text").localCheckpoint(
         eager=True
     )

@@ -25,6 +25,7 @@ from eco_pulse_lakehouse_spark.corpus import extended as _ext
 from eco_pulse_lakehouse_spark.corpus import northstar as _ns
 from eco_pulse_lakehouse_spark.corpus import relational as _rel
 from eco_pulse_lakehouse_spark.corpus._registry import T, make_registry
+from eco_pulse_lakehouse_spark.session import local_frame
 from eco_pulse_lakehouse_spark.streaming import pipeline as sp
 
 QUERIES, ORACLES, q = make_registry()
@@ -261,7 +262,7 @@ def _stage_events_with_wm_sentinels(spark, sf_dir: str) -> str:
             (-1 - 10 * i, sent_ts, -1, "purchase", 0.0, "{}"),
             (-2 - 10 * i, sent_ts, -1, "click", 0.0, "{}"),
         ]
-        spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode(
+        local_frame(spark, rows, EVENTS_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(stage)
     _SENTINEL_STAGE_CACHE[sf_dir] = stage
@@ -898,8 +899,8 @@ def t19_stream_ann_ingest(spark, sf_dir):
     coarse_df, rcb_df = ivfpq_codebooks(qz, "vec_id", "q_vec")
     # persist the (tiny) index parameters driver-side so every batch
     # encodes against identical plan constants
-    coarse = spark.createDataFrame(coarse_df.collect(), coarse_df.schema)
-    rcb = spark.createDataFrame(rcb_df.collect(), rcb_df.schema)
+    coarse = local_frame(spark, coarse_df.collect(), coarse_df.schema)
+    rcb = local_frame(spark, rcb_df.collect(), rcb_df.schema)
 
     stage = os.path.join(
         tempfile.gettempdir(), f"eco_pulse_t19_{uuid.uuid4().hex}"
@@ -1452,7 +1453,7 @@ def t25_stream_semdedup(spark, sf_dir):
     coarse_df = pq_codebooks(
         qz, "vec_id", "q_vec", m_segments=1, k_codes=16, dim=64
     )
-    coarse = spark.createDataFrame(coarse_df.collect(), coarse_df.schema)
+    coarse = local_frame(spark, coarse_df.collect(), coarse_df.schema)
 
     stage = os.path.join(
         tempfile.gettempdir(), f"eco_pulse_t25_{uuid.uuid4().hex}"
@@ -1781,7 +1782,7 @@ def t30_stream_twap(spark, sf_dir):
                 os.path.join(state_root, f"epoch={prev[-1]}")
             )
         else:
-            prior = sp_.createDataFrame([], state_schema)
+            prior = local_frame(sp_, [], state_schema)
         cur = batch_df.select("user_id", "ts_ms", "event_id", "v_fp")
         alle = prior.unionByName(cur)
         wk = Window.partitionBy("user_id").orderBy(
@@ -1994,7 +1995,7 @@ def t33_stream_holt(spark, sf_dir):
                 os.path.join(state_root, f"epoch={prev[-1]}")
             )
         else:
-            prior = sp_.createDataFrame([], state_schema)
+            prior = local_frame(sp_, [], state_schema)
 
         def continue_fold(pdf: pd.DataFrame) -> pd.DataFrame:
             st = pdf[pdf["__src"] == 0]
@@ -2111,7 +2112,7 @@ def t34_stream_hw_seasonal(spark, sf_dir):
                 os.path.join(state_root, f"epoch={prev[-1]}")
             )
         else:
-            prior = sp_.createDataFrame([], state_schema)
+            prior = local_frame(sp_, [], state_schema)
 
         def seq(a) -> float:
             t = 0.0
@@ -2317,7 +2318,7 @@ def t35_stream_dedup_clusters(spark, sf_dir):
                 os.path.join(state_root, f"epoch={prev[-1]}")
             )
         else:
-            prior = sp_.createDataFrame([], "id BIGINT, comp BIGINT")
+            prior = local_frame(sp_, [], "id BIGINT, comp BIGINT")
         incremental_components_update(prior, new_pairs).write.mode(
             "overwrite"
         ).parquet(os.path.join(state_root, f"epoch={batch_id}"))
@@ -2358,6 +2359,7 @@ def t32_stream_bm25(spark, sf_dir):
     re-tokenized, any query batch is a broadcast over the postings."""
     from eco_pulse_lakehouse_spark.operators.retrieval import (
         bm25_from_postings,
+        query_terms,
         term_postings,
     )
 
@@ -2391,14 +2393,7 @@ def t32_stream_bm25(spark, sf_dir):
     q_.awaitTermination()
 
     postings = spark.read.parquet(os.path.join(sink, "batch=*"))
-    q_terms = spark.createDataFrame(
-        [
-            (qid, t)
-            for qid, qtext in _ns._BM25_QUERIES
-            for t in qtext.split(" ")
-        ],
-        "query_id long, term string",
-    ).distinct()
+    q_terms = query_terms(spark, _ns._BM25_QUERIES)
     return bm25_from_postings(
         postings, "doc_id", q_terms, k1=1.2, b=0.75, k=10
     )
@@ -3527,9 +3522,8 @@ def t47_stream_search_serving(spark, sf_dir):
 
     shared_stats = bm25_shared_stats(store, "doc_id")
 
-    req = spark.createDataFrame(
-        [(qid, qtext) for qid, qtext in _ns._BM25_QUERIES],
-        "query_id long, query_text string",
+    req = local_frame(
+        spark, _ns._BM25_QUERIES, "query_id long, query_text string"
     )
     stage = os.path.join(
         tempfile.gettempdir(), f"eco_pulse_t47_{uuid.uuid4().hex}"
@@ -3695,9 +3689,8 @@ def t49_stream_hybrid_serving(spark, sf_dir):
 
     shared_stats = bm25_shared_stats(postings, "doc_id")
 
-    req = spark.createDataFrame(
-        [(qid, qtext) for qid, qtext in _ns._BM25_QUERIES],
-        "query_id long, query_text string",
+    req = local_frame(
+        spark, _ns._BM25_QUERIES, "query_id long, query_text string"
     )
     stage = os.path.join(
         tempfile.gettempdir(), f"eco_pulse_t49_{uuid.uuid4().hex}"
@@ -4000,9 +3993,8 @@ def t52_stream_hybrid_loop(spark, sf_dir):
 
     shared_stats = bm25_shared_stats(postings, "doc_id")
 
-    req = spark.createDataFrame(
-        [(qid, qtext) for qid, qtext in _ns._BM25_QUERIES],
-        "query_id long, query_text string",
+    req = local_frame(
+        spark, _ns._BM25_QUERIES, "query_id long, query_text string"
     )
     r_stage = os.path.join(base, "requests_in")
     req.repartition(2).write.parquet(r_stage)
@@ -4130,7 +4122,7 @@ def t53_stream_winnowing_incremental(spark, sf_dir):
                 os.path.join(state_root, f"epoch={prev[-1]}")
             )
         else:
-            prior = sp_.createDataFrame([], "id BIGINT, comp BIGINT")
+            prior = local_frame(sp_, [], "id BIGINT, comp BIGINT")
         incremental_components_update(prior, new_pairs).write.mode(
             "overwrite"
         ).parquet(os.path.join(state_root, f"epoch={batch_id}"))

@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from eco_pulse_lakehouse_spark.functions.text import tokens
+from eco_pulse_lakehouse_spark.session import local_frame
 
 
 def _empty_str_array() -> Column:
@@ -159,9 +160,10 @@ def learn_bpe_merges_from_vocab(
         seg = seg.withColumn(
             "seg", apply_merge(F.col("seg"), b.left_sym, b.right_sym)
         ).localCheckpoint(eager=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         learned,
-        schema="merge_round int, left_sym string, right_sym string, "
+        "merge_round int, left_sym string, right_sym string, "
         "pair_count bigint",
     )
 
@@ -305,9 +307,10 @@ def learn_wordpiece_merges_from_vocab(
         seg = seg.withColumn(
             "seg", apply_merge(F.col("seg"), b.left_sym, b.right_sym)
         ).localCheckpoint(eager=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         learned,
-        schema="merge_round int, left_sym string, right_sym string, "
+        "merge_round int, left_sym string, right_sym string, "
         "pair_count bigint, score_fp bigint",
     )
 

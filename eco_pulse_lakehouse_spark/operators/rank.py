@@ -30,6 +30,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from eco_pulse_lakehouse_spark.session import local_frame
+
 _PID = "__pid"
 _LOCAL = "__local_rn"
 
@@ -68,8 +70,8 @@ def global_row_number(
     # broadcast-join the offsets (a when-chain would be an
     # O(partitions)-deep expression tree — pathological at cluster
     # partition counts)
-    off_df = df.sparkSession.createDataFrame(
-        offsets, f"{_PID} INT, __offset LONG"
+    off_df = local_frame(
+        df.sparkSession, offsets, f"{_PID} INT, __offset LONG"
     )
     w = Window.partitionBy(_PID).orderBy(*order_by)
     return (
@@ -115,7 +117,7 @@ def global_running_sum(
         for c in sum_cols:
             acc[c] += r[c] or 0
     off_schema = ", ".join([f"{_PID} INT"] + [f"__off_{c} LONG" for c in sum_cols])
-    off_df = df.sparkSession.createDataFrame(offsets, off_schema)
+    off_df = local_frame(df.sparkSession, offsets, off_schema)
     w = (
         Window.partitionBy(_PID)
         .orderBy(*order_by)

@@ -27,10 +27,25 @@ measured); scores are therefore rounded to 6 decimals on both sides
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eco_pulse_lakehouse_spark.functions.text import tokens
+from eco_pulse_lakehouse_spark.session import local_frame
+
+
+def query_terms(
+    spark: SparkSession, queries: list[tuple[int, str]]
+) -> DataFrame:
+    """The distinct (query_id, term) pairs of a literal query batch,
+    split on single spaces, as a driver-local relation. Deduped in
+    the driver (first-seen order), so the plan carries no
+    ``Distinct`` shuffle and no Python-worker scan — the frame is a
+    ``LocalTableScan`` that broadcasts straight onto postings."""
+    pairs = dict.fromkeys(
+        (qid, t) for qid, qtext in queries for t in qtext.split(" ")
+    )
+    return local_frame(spark, pairs, "query_id long, term string")
 
 
 def term_postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -112,9 +127,9 @@ def bm25_topk(
 
     Same inverted-index scale shape as tf·idf: one postings shuffle
     of short rows, a vocabulary-sized df table, and a broadcast of
-    the (tiny) query-term list onto postings — the corpus is never
-    re-shuffled per query, so a 1000-query batch costs the same
-    shuffle as one query.
+    the (tiny) driver-local query-term relation (:func:`query_terms`)
+    onto postings — the corpus is never re-shuffled per query, so a
+    1000-query batch costs the same shuffle as one query.
 
     Cross-engine determinism: idf is rounded to 6 decimals (ln is
     1-ulp unstable across libms; irrationals are boundary-safe),
@@ -124,12 +139,7 @@ def bm25_topk(
     therefore independent of Spark's partial-aggregation order
     (the g1_pagerank trick; doubles summed in different orders
     differ in the last ulp)."""
-    q_terms = (
-        docs.sparkSession.createDataFrame(
-            [(qid, t) for qid, qtext in queries for t in qtext.split(" ")],
-            "query_id long, term string",
-        ).distinct()
-    )
+    q_terms = query_terms(docs.sparkSession, queries)
     return _bm25_score(docs, id_col, text_col, q_terms, k1, b, k)
 
 
@@ -296,10 +306,7 @@ def term_overlap_topk(
     length normalization). Same inverted-index shape: one postings
     shuffle, broadcast query terms, all-integer scores — exactly
     SQL-replayable."""
-    q_terms = docs.sparkSession.createDataFrame(
-        [(qid, t) for qid, qtext in queries for t in qtext.split(" ")],
-        "query_id long, term string",
-    ).distinct()
+    q_terms = query_terms(docs.sparkSession, queries)
     postings = term_postings(docs, id_col, text_col)
     return term_overlap_from_postings(postings, id_col, q_terms, k)
 
@@ -465,12 +472,7 @@ def bm25_prf_topk(
     re-derives it from the text scan. localCheckpoint pins it once
     (the curation-flagship shared-featurize precedent — measured
     25-30% at sf0.1; persist() on a real cluster)."""
-    q_terms = (
-        docs.sparkSession.createDataFrame(
-            [(qid, t) for qid, qtext in queries for t in qtext.split(" ")],
-            "query_id long, term string",
-        ).distinct()
-    )
+    q_terms = query_terms(docs.sparkSession, queries)
     postings = term_postings(docs, id_col, text_col).localCheckpoint(
         eager=True
     )
@@ -482,8 +484,8 @@ def bm25_prf_topk(
         postings, q_terms, id_col, k1, b, fb_k, n_expand,
         dl=dl, df_t=df_t, stats=stats,
     )
-    # no distinct needed: q_terms is already distinct and expansion
-    # rows are disjoint from it by construction (originals excluded)
+    # no distinct needed: query_terms deduped the pairs in the driver
+    # and expansion rows are disjoint from them (originals excluded)
     q2 = q_terms.union(expansion)
     return bm25_from_postings(
         postings, id_col, q2, k1, b, k, dl=dl, df_t=df_t, stats=stats

@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from eco_pulse_lakehouse_spark.session import local_frame
+
 KNUTH = 2654435761  # 2^32 / golden ratio, Knuth multiplicative hash
 # Alternate odd multipliers (xxhash32's public primes) for pipelines
 # that need SEVERAL independent-looking draws per id. Additive
@@ -164,8 +166,8 @@ def domain_mixture_sample(
     exactly reproducible by the SQL oracle (Knuth-hash arithmetic,
     no RNG)."""
     counts = df.groupBy(domain_col).agg(F.count(F.lit(1)).alias("__n"))
-    w = df.sparkSession.createDataFrame(
-        list(weights.items()), f"{domain_col} string, __wt double"
+    w = local_frame(
+        df.sparkSession, weights.items(), f"{domain_col} string, __wt double"
     )
     frac = F.least(
         F.lit(1.0),

@@ -48,10 +48,12 @@ from eco_pulse_lakehouse_spark.operators.retrieval import (
     bm25_from_postings,
     bm25_shared_stats,
     prf_expand_terms,
+    query_terms,
     rrf_fuse,
     term_postings,
 )
 from eco_pulse_lakehouse_spark.plans.rag_context import int8_store
+from eco_pulse_lakehouse_spark.session import local_frame
 
 
 def hybrid_serving(
@@ -90,10 +92,10 @@ def hybrid_serving(
     independent, so disjoint request batches union to the one-shot
     batch result verbatim."""
     spark = docs.sparkSession
-    q_terms = spark.createDataFrame(
-        [(qid, t) for qid, qtext in queries for t in qtext.split(" ")],
-        "query_id long, term string",
-    ).distinct()
+    # request frames are driver-local relations (LocalTableScan):
+    # deduped in the driver, so a batch pays no Python-worker scan and
+    # no Distinct shuffle before the broadcast onto postings
+    q_terms = query_terms(spark, queries)
     if postings is None:
         # maintained keyword index: PRF + scoring + budget all read it
         postings = term_postings(docs, id_col, text_col).localCheckpoint(
@@ -134,8 +136,8 @@ def hybrid_serving(
         quantized_dot_topk,
     )
 
-    qids = spark.createDataFrame(
-        [(qid,) for qid, _ in queries], f"{vec_id_col} long"
+    qids = local_frame(
+        spark, [(qid,) for qid, _ in queries], f"{vec_id_col} long"
     )
     dq = quantized.join(F.broadcast(qids), vec_id_col, "left_semi").select(
         F.col(vec_id_col).alias("q_id"), F.col("q_vec").alias("qa")

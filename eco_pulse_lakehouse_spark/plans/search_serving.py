@@ -28,6 +28,7 @@ from eco_pulse_lakehouse_spark.operators.retrieval import (
     bm25_from_postings,
     bm25_shared_stats,
     prf_expand_terms,
+    query_terms,
     rrf_fuse,
     term_overlap_from_postings,
     term_postings,
@@ -60,12 +61,7 @@ def search_serving(
     request stream never re-tokenizes the corpus; every stage is
     per-query independent, so disjoint request batches union to the
     one-shot batch result verbatim."""
-    q_terms = (
-        docs.sparkSession.createDataFrame(
-            [(qid, t) for qid, qtext in queries for t in qtext.split(" ")],
-            "query_id long, term string",
-        ).distinct()
-    )
+    q_terms = query_terms(docs.sparkSession, queries)
     if postings is None:
         # the maintained index artifact: ~8 plan consumers downstream
         postings = term_postings(docs, id_col, text_col).localCheckpoint(

@@ -20,8 +20,10 @@ Scale notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType, _parse_datatype_string
 
 
 def get_session(
@@ -81,3 +83,44 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: str | StructType
+) -> DataFrame:
+    """A small driver-built frame as a Catalyst ``LocalRelation``.
+
+    ``spark.createDataFrame(list, schema)`` pickles the rows into a
+    Python RDD (``Scan ExistingRDD``), so every scan of it runs its
+    tasks through Python workers — a fixed cost per request frame on
+    the serving path. An Arrow table plans as a ``LocalRelation``
+    (``LocalTableScan``): Python only builds the plan, the JVM runs it.
+
+    Rows and schema equal the list path's, nullability included.
+    Naive ``datetime`` values in a TIMESTAMP column are read as
+    process-local wall time, as the list path reads them
+    (``TimestampType.toInternal``), not in the session time zone the
+    Arrow path would assume. Meant for driver-sized data only:
+    request batches, codebooks, per-partition offsets."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for field, values, arrow_type in zip(
+        schema.fields, columns, arrow_schema.types
+    ):
+        if isinstance(field.dataType, TimestampType):
+            micros = [
+                None if v is None else field.dataType.toInternal(v)
+                for v in values
+            ]
+            arrays.append(pa.array(micros, pa.int64()).cast(arrow_type))
+        else:
+            arrays.append(pa.array(values, arrow_type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -8,6 +8,7 @@ covers the hot paths.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -817,6 +818,18 @@ def test_hybrid_serving_plan_shape(spark):
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
     assert "FullOuter" in plan, plan
+    # request frames are driver-local relations (LocalTableScan), never
+    # a Python-RDD scan; Scan ExistingRDD is left only for the pinned
+    # postings and its dl/df_t stats
+    def cols(leaf):
+        return {c.split("#")[0].strip() for c in leaf.split(",")}
+
+    local = [cols(l) for l in re.findall(r"LocalTableScan \[([^\]]*)\]", plan)]
+    assert any({"query_id", "term"} <= c for c in local), plan
+    assert {"vec_id"} in local, plan
+    pinned = [{"doc_id", "term", "tf"}, {"term", "df"}, {"doc_id", "dl"}]
+    for leaf in re.findall(r"Scan ExistingRDD\[([^\]]*)\]", plan):
+        assert cols(leaf) in pinned, leaf
 
 
 def test_winnowing_clusters_plan_no_cartesian(spark):
