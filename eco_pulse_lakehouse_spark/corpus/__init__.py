@@ -8,7 +8,10 @@ runs both sides and compares row-count + schema + values.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import os
+import re
+from collections.abc import Callable, Container, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -22,611 +25,102 @@ from eco_pulse_lakehouse_spark.corpus import (
 
 _MODULES = (relational, extended, tpch, northstar, streaming_corpus)
 
-# Round-3 driver window greens (CORRECTNESS_r03.json, all
-# hash_match): named because after round 8 refreshes the r01-era
-# remainder, this is the oldest-standing certification tranche —
-# tier-3 staleness-rotation candidates.
-_R03_GREEN: frozenset[str] = frozenset(
-    {
-        "a10_quantiles", "a11_grouping_sets", "a13_collect_set",
-        "a9_pivot", "f_map_lookup", "m4_versioned_merge",
-        "o2_global_rank", "s11_partitioned_scan", "s12_orc_roundtrip",
-        "s13_schema_evolution", "s14_python_datasource",
-        "s15_compaction", "s16_versioned_table", "s17_versioned_changes",
-        "s18_versioned_vacuum", "s19_versioned_restore", "s8_json_source",
-        "t10_stream_stream_join", "t11_stream_stream_left_join",
-        "t12_python_stream_source", "t13_chained_windows",
-        "t14_sliding_windows", "t15_stream_reassembly", "t16_stream_fanout",
-        "t17_stream_countmin", "t19_stream_ann_ingest",
-        "t20_stream_versioned_gold", "t21_cdf_incremental_agg",
-        "t22_stream_cdf", "t23_stream_psi", "t24_stream_ks",
-        "t25_stream_semdedup", "t26_stream_heavy_hitters",
-        "t3_stream_append_silver", "t5_stream_dedup",
-        "t6_stream_windowed_counts", "t8_stream_static_join",
-        "t9_session_window", "u1_pandas_running_max", "u2_pandas_normalize",
-        "w10_null_ordering", "w8_range_frame", "w9_rank_family",
-    }
+_REPO = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-# Round-7 driver window: 50/50 green on the full rows+schema+hash
-# triple (CORRECTNESS_r07.json) — named so the rotation can subtract
-# these from the stale tiers below.
-_R07_GREEN: frozenset[str] = frozenset(
+# Entries whose code changed after their latest CORRECTNESS row: they
+# lead the correctness window. A change adds every registry entry
+# whose code path it touches; empty the set when the next
+# CORRECTNESS_r*.json lands, because that file is their new evidence.
+CHANGED: frozenset[str] = frozenset(
     {
-        "g1_pagerank", "tpch_q1", "tpch_q3", "x3_cosine_topk",
-        "x3_cosine_neardup", "x3_ann_lsh", "x3_ivf_persisted",
-        "x3_ivf_topk", "x3_ann_refined", "x3_ivf_bounded",
-        "t30_stream_twap", "t33_stream_holt", "t34_stream_hw_seasonal",
-        "t35_stream_dedup_clusters", "x3_lsh_multiprobe",
-        "x4_bpe_merges", "x4_bpe_segment", "x4_bpe_token_count",
-        "x2_phonetic_bounded", "x6_dsir_weights", "x6_dsir_select",
-        "x2_line_dedup", "x6_dsir_resample", "x3_binary_quant_topk",
-        "x4_trigram_backoff", "x4_distinct_ngrams", "x5_image_ahash",
-        "x2_prefix_filter_jaccard", "x6_budget_select",
-        "x2_canonical_per_cluster", "x6_k_anonymity",
-        "j2_range_join_grid2", "j2_range_join_band2", "x1_soft_dedup",
-        "flagship_curation_select", "t36_stream_bpe", "t37_stream_dsir",
-        "t38_stream_line_dedup", "x2_dedup_clusters", "x6_group_split",
-        "o2_global_rank", "flagship_gold_risk", "s2_json_decode",
-        "s5_write_roundtrip", "s7_csv_roundtrip", "s9_json_roundtrip",
-        "s10_synthetic_generator", "p1_project_rename",
-        "p2_derived_column", "p3_eq_filter",
-    }
-)
-
-# Round-8 driver window: 48/50 green on the full rows+schema+hash
-# triple (CORRECTNESS_r08.json; the 2 non-passes are the by-design
-# rows-only entries a6_approx_count_distinct / f_random_generator,
-# which have no oracle and were checked rows-clean).
-_R08_GREEN: frozenset[str] = frozenset(
-    {
-        "a1_count_star", "a2_conditional_counts", "a3_avg",
-        "a4_groupby_count", "a5_distinct", "a6_count_distinct",
-        "a7_summary", "a8_rollup", "f_case_when_chain", "f_datetime",
-        "f_math", "f_null_handling", "f_string",
-        "flagship_curation_select", "flagship_tokenizer_pipeline",
-        "j1_cross_join", "j2_range_join_band", "j2_range_join_grid",
-        "j2_range_join_naive", "j3_equi_join_3way", "j3_outer_join",
-        "j3_semi_join", "o1_latest_events", "o3_topk_orders",
-        "p4_range_filter", "p5_compound_filter", "p6_in_filter",
-        "p9_unpivot", "set_intersect", "set_union",
-        "t38_stream_line_dedup", "t39_stream_wordpiece",
-        "w1_latest_per_key", "w2_keep_best", "w3_rolling_avg",
-        "w4_lag_delta", "w5_rank", "w6_running_sum", "x2_line_dedup",
-        "x2_prefix_filter_jaccard", "x3_ivf_topk",
-        "x4_perplexity_buckets", "x4_sp_unigram_em",
-        "x4_sp_unigram_segment", "x4_wordpiece_merges",
-        "x4_wordpiece_segment", "x4_wordpiece_token_count",
-        "x5_image_ahash",
-    }
-)
-
-# Round-9 driver window: 50/50 green on the full rows+schema+hash
-# triple (CORRECTNESS_r09.json — the first zero-err window).
-_R09_GREEN: frozenset[str] = frozenset(
-    {
-        "a10_quantiles", "a11_grouping_sets", "a13_collect_set",
-        "a9_pivot", "f_map_lookup", "flagship_curation_select",
-        "flagship_data_factory", "flagship_gold_risk_topk",
-        "flagship_tokenizer_pipeline", "j4_asof_join", "m1_merge_upsert",
-        "m4_versioned_merge", "s11_partitioned_scan", "s12_orc_roundtrip",
-        "s13_schema_evolution", "s14_python_datasource", "s15_compaction",
-        "s16_versioned_table", "s17_versioned_changes",
-        "s18_versioned_vacuum", "s19_versioned_restore", "s8_json_source",
-        "t10_stream_stream_join", "t11_stream_stream_left_join",
-        "t12_python_stream_source", "t13_chained_windows",
-        "t14_sliding_windows", "t15_stream_reassembly",
-        "t16_stream_fanout", "t17_stream_countmin", "t19_stream_ann_ingest",
-        "t20_stream_versioned_gold", "t3_stream_append_silver",
-        "t40_stream_wordpiece_infer", "t41_stream_nb_gate",
-        "t42_stream_gold_topk", "t5_stream_dedup",
-        "t6_stream_windowed_counts", "t8_stream_static_join",
-        "t9_session_window", "u1_pandas_running_max", "u2_pandas_normalize",
-        "w10_null_ordering", "w8_range_frame", "w9_rank_family",
-        "x3_mmr_rerank", "x4_nb_lang_id", "x4_nb_log_odds",
-        "x4_nb_quality_gate", "x4_wordpiece_merges",
-    }
-)
-
-# Round-10 driver window: 50/50 green on the full rows+schema+hash
-# triple (CORRECTNESS_r10.json — the second consecutive zero-err
-# window; covers the 14 changed/new r10 entries + 23 of the r02-stale
-# tranche + the 15 late-session-17 families).
-_R10_GREEN: frozenset[str] = frozenset(
-    {
-        "a32_ams_f2", "flagship_curation_select", "flagship_data_factory",
-        "flagship_data_factory_nb", "flagship_rag_context",
-        "flagship_search_serving", "flagship_text_pipeline",
-        "q2_zscore_outliers", "q3_iqr_outliers", "q5_expectations",
-        "q6_seasonal_deviants", "q7_winsorize", "q8_quantile_binning",
-        "q9_cusum", "t41_stream_nb_gate", "t43_stream_rag_context",
-        "t44_stream_nb_gate_sweep", "t45_stream_decontaminate",
-        "t46_stream_unimax", "t47_stream_search_serving",
-        "t48_stream_winnowing", "tpch_q12", "tpch_q3", "tpch_q5",
-        "x1_exact_dedup", "x1_hash_dedup_key", "x2_ngram_jaccard",
-        "x2_winnowing_bounded", "x2_winnowing_pairs", "x3_pq_topk",
-        "x3_quantized_topk", "x4_fingerprint", "x4_lang_id",
-        "x4_nb_gate_sweep", "x4_nb_log_odds", "x4_nb_quality_gate",
-        "x4_prf_expansion", "x4_quality_score", "x4_rake_keyphrases",
-        "x4_text_stats", "x4_textrank_keywords", "x5_image_phash",
-        "x5_multimodal_meta", "x5_resize_plan", "x6_decontaminate",
-        "x6_hash_split", "x6_priority_sample", "x6_unimax_mixture",
-        "x8_hilbert_values", "x8_zorder_values",
-    }
-)
-
-# Round-11 driver window: 50/50 green on the full rows+schema+hash
-# triple (CORRECTNESS_r11.json — the third consecutive zero-err
-# window; covers the four never-checked r11 additions, the 13
-# pin-touched entries, and the r02/r03 staleness tails).
-_R11_GREEN: frozenset[str] = frozenset(
-    {
-        "flagship_hybrid_serving", "flagship_search_serving",
-        "j3_anti_join", "q1_quality_gate", "q4_profile",
-        "s4_scan_pushdown", "set_except", "t21_cdf_incremental_agg",
-        "t22_stream_cdf", "t23_stream_psi", "t24_stream_ks",
-        "t25_stream_semdedup", "t26_stream_heavy_hitters",
-        "t47_stream_search_serving", "t49_stream_hybrid_serving",
-        "t50_stream_hybrid_index", "x2_canonical_per_cluster",
-        "x2_containment", "x2_dedup_clusters", "x2_edit_distance",
-        "x2_minhash_lsh", "x2_ngram_jaccard",
-        "x2_prefix_filter_jaccard", "x2_winnowing_bounded",
-        "x2_winnowing_clusters", "x2_winnowing_pairs",
-        "x3_embedding_pool", "x3_ivfpq_topk", "x4_bm25",
-        "x4_bm25_table", "x4_chunk_documents", "x4_collocations",
-        "x4_pii_scrub", "x4_quality_classifier", "x4_rake_keyphrases",
-        "x4_repetition_signals", "x4_repetition_stats",
-        "x4_textrank_keywords", "x4_tfidf_topk", "x4_token_estimate",
-        "x4_unigram_logprob", "x4_vocab_coverage", "x5_chunked_pages",
-        "x5_image_ahash", "x5_image_phash", "x6_deterministic_sample",
-        "x6_domain_mixture", "x6_group_split", "x6_stratified_sample",
-        "x7_pack_documents",
-    }
-)
-
-# Entries whose latest standing green row is round 4/round 5 — the
-# two oldest tranches after the r11 fold (full-history audit over
-# CORRECTNESS_r01..r11, recomputed r12; nothing older remains). The
-# r12 staleness tiers: r04 tail first (42 rows — the TPC-H block),
-# then the r05 tail head fills remaining slots.
-_R04_TAIL: frozenset[str] = frozenset(
-    {
-        "a30_spacesaving", "f_param_sql", "f_pipe_syntax",
-        "flagship_training_export", "g3_recursive_bfs",
-        "j5_lateral_topk", "q12_psi_drift", "s22_xml_roundtrip",
-        "s23_binary_file", "skew4_hot_key_count", "skew5_hot_key_join",
-        "t27_stream_patterns", "t29_stream_dataset_card", "tpch_q10",
-        "tpch_q11", "tpch_q13", "tpch_q14", "tpch_q15", "tpch_q16",
-        "tpch_q17", "tpch_q18", "tpch_q19", "tpch_q2", "tpch_q20",
-        "tpch_q21", "tpch_q22", "tpch_q4", "tpch_q6", "tpch_q7",
-        "tpch_q8", "tpch_q9", "tpch_scalar_subquery", "u3_python_udtf",
-        "w23_twap", "w24_match_recognize", "w25_twap_gap_days",
-        "w26_rolling_median", "w7_sessionize", "x2_dup_ngram_frac",
-        "x3_mrl_sweep", "x6_temperature_mixture", "x7_dataset_card",
-    }
-)
-_R05_TAIL: frozenset[str] = frozenset(
-    {
-        "a12_exact_stats", "a14_histogram", "a15_cube", "a16_retention",
-        "a18_equidepth_hist", "a19_countmin", "a22_bitmap_distinct",
-        "a23_listagg", "a24_exact_corr", "a25_exact_skew_kurt",
-        "a26_mode", "a27_cohort_retention", "a28_arg_minmax",
-        "a29_heavy_hitters", "a31_weighted_median", "f_hof_array",
-        "f_string_extended", "flagship_sensor_health", "q15_chi2_drift",
-        "t31_stream_chi2", "t32_stream_bm25", "w11_gap_fill",
-        "w12_funnel", "w13_journey_pattern", "w14_ewma", "w15_sax_words",
-        "w16_sax_motif_pairs", "w17_trend_slope", "w18_window_distinct",
-        "w19_sax_motif_capped", "w20_capped_sessions", "w22_bollinger",
-        "w27_match_alternation", "w28_holt_linear", "w29_holt_mase",
-        "x2_dup_span_removal", "x2_phonetic_blocking", "x2_simhash",
-        "x4_rrf_fusion", "x5_frame_sampling", "x5_multimodal_features",
-    }
-)
-
-# Round-12 front tier: entries whose CODE changed this round. The
-# dedup shared-build pins were refactored through the _pin() helper
-# (.transform(_pin) — same localCheckpoint call, output-identical,
-# re-verified locally), so the five entries whose operator bodies
-# changed textually get fresh rows first.
-_NEW_R12: frozenset[str] = frozenset(
-    {
-        "x2_minhash_lsh",
-        "x2_winnowing_pairs",
-        "x2_winnowing_bounded",
-        "x2_prefix_filter_jaccard",
-        "x2_ngram_jaccard",
-    }
-)
-
-# Round-13 front tier (ADVICE r12 low 3): the r12 front tier listed
-# only the five dedup _pin consumers, but r12's one behavioral plan
-# change was _pin_round inside connected_components — these are its
-# corpus consumers whose latest driver row PREDATES that change
-# (t51/t53 got post-change r12 rows and are excluded; g1_pagerank /
-# g3_recursive_bfs / g2_triangles don't route through _pin_round),
-# plus x2_containment, which shares the r12-pinned
-# _shingle_pair_counts build and was likewise omitted. The r13
-# components.py edit (fallback broadened to Exception) touches the
-# same plans again.
-_NEW_R13: frozenset[str] = frozenset(
-    {
-        "x2_dedup_clusters",
-        "x2_canonical_per_cluster",
-        "x2_winnowing_clusters",
-        "x6_group_split",
-        "t35_stream_dedup_clusters",
-        "x2_containment",
-    }
-)
-
-# Round-12 driver window: 50/50 green on the full rows+schema+hash
-# triple (CORRECTNESS_r12.json — fifth consecutive zero-err window);
-# covers the five _pin-refactor dedup entries, the three never-
-# checked r12 stream compositions (t51/t52/t53) and the entire
-# 42-row r04 tail (the TPC-H block).
-_R12_GREEN: frozenset[str] = frozenset(
-    {
-        "x2_ngram_jaccard", "x2_minhash_lsh", "x2_winnowing_pairs",
-        "x2_winnowing_bounded", "x2_prefix_filter_jaccard",
-        "t51_stream_winnowing_clusters", "t52_stream_hybrid_loop",
-        "t53_stream_winnowing_incremental", "w7_sessionize",
-        "skew4_hot_key_count", "skew5_hot_key_join", "s22_xml_roundtrip",
-        "s23_binary_file", "j5_lateral_topk", "w26_rolling_median",
-        "g3_recursive_bfs", "f_param_sql", "f_pipe_syntax",
-        "u3_python_udtf", "w24_match_recognize", "a30_spacesaving",
-        "q12_psi_drift", "w23_twap", "w25_twap_gap_days", "tpch_q6",
-        "tpch_q4", "tpch_scalar_subquery", "tpch_q10", "tpch_q18",
-        "tpch_q7", "tpch_q8", "tpch_q9", "tpch_q13", "tpch_q14",
-        "tpch_q15", "tpch_q16", "tpch_q17", "tpch_q19", "tpch_q21",
-        "tpch_q22", "tpch_q2", "tpch_q11", "tpch_q20", "x3_mrl_sweep",
-        "x2_dup_ngram_frac", "x6_temperature_mixture", "x7_dataset_card",
-        "flagship_training_export", "t27_stream_patterns",
-        "t29_stream_dataset_card",
-    }
-)
-
-# Round-6 driver window greens (CORRECTNESS_r06.json: 44 hash_match
-# + the 6 rows-only-by-design sketch/DTW/block entries) — named for
-# the r13 staleness rotation: after the r12 fold these are the
-# SECOND-oldest standing rows (the r05 tail leads).
-_R06_GREEN: frozenset[str] = frozenset(
-    {
-        "a10_approx_quantiles", "a17_hll_mergeable", "a20_theta_setops",
-        "a21_kll_quantiles", "cat_bucketed_join_agg", "f_agg_predicates",
-        "f_explode_tokens", "f_haversine", "f_regexp_suite", "f_sql_udf",
-        "f_try_arithmetic", "f_variant_extract", "g1_pagerank",
-        "g2_triangles", "j4_asof_forward", "j6_interval_join",
-        "j7_bloom_join", "j9_asof_tolerance", "m2_snapshot_diff",
-        "m3_scd2", "o4_distributed_global_rank", "q10_mad_outliers",
-        "q11_ks_drift", "q13_benford", "q14_profile_diff",
-        "s20_versioned_history", "s21_text_source", "skew1_salted_count",
-        "skew2_salted_sum", "skew3_salted_join", "t34_stream_hw_seasonal",
-        "t35_stream_dedup_clusters", "w21_dtw_motif_pairs",
-        "w30_hw_seasonal", "w31_hw_mase", "x2_containment",
-        "x2_snm_multipass", "x2_sorted_neighborhood",
-        "x3_cosine_topk_block", "x3_pq_distortion_sweep", "x3_semdedup",
-        "x4_bigram_logprob", "x5_audio_segments",
-        "x6_semantic_decontaminate", "x7_curriculum",
-    }
-)
-
-# Entries a past driver round already CORRECTNESS-checked green
-# (CORRECTNESS_r01.json + CORRECTNESS_r02.json). The driver windows
-# the registry from the front, so never-checked entries must lead;
-# these go last.
-_DRIVER_GREEN = frozenset(
-    {
-        # --- round 1 ---
-        "flagship_gold_risk", "s2_json_decode", "s4_scan_pushdown",
-        "s5_write_roundtrip", "s7_csv_roundtrip", "s9_json_roundtrip",
-        "s10_synthetic_generator", "p1_project_rename", "p2_derived_column",
-        "p3_eq_filter", "p4_range_filter", "p5_compound_filter", "p9_unpivot",
-        "p6_in_filter", "j1_cross_join", "j2_range_join_naive",
-        "j2_range_join_grid", "j2_range_join_band", "j3_equi_join_3way",
-        "j3_semi_join", "j3_anti_join", "j3_outer_join", "a1_count_star",
-        "a2_conditional_counts", "a3_avg", "a4_groupby_count", "a5_distinct",
-        "a6_count_distinct", "a6_approx_count_distinct", "a7_summary",
-        "a8_rollup", "w1_latest_per_key", "w2_keep_best", "w3_rolling_avg",
-        "w4_lag_delta", "w5_rank", "w6_running_sum", "o1_latest_events",
-        "o3_topk_orders", "set_union", "set_intersect",
-        "f_case_when_chain", "f_math", "f_string", "f_datetime",
-        "f_null_handling", "f_random_generator", "j4_asof_join",
-        "m1_merge_upsert",
-        # --- round 2 ---
-        "flagship_text_pipeline", "q2_zscore_outliers", "q3_iqr_outliers",
-        "q5_expectations", "q6_seasonal_deviants", "q7_winsorize",
-        "q8_quantile_binning", "q9_cusum", "x1_exact_dedup",
-        "x1_hash_dedup_key", "x2_dedup_clusters", "x2_edit_distance",
-        "x2_ngram_jaccard", "x3_ann_refined", "x3_cosine_neardup",
-        "x3_cosine_topk", "x3_ivfpq_topk", "x3_pq_topk", "x3_quantized_topk",
-        "x4_chunk_documents", "x4_collocations", "x4_fingerprint",
-        "x4_lang_id", "x4_pii_scrub", "x4_quality_classifier",
-        "x4_quality_score", "x4_repetition_signals", "x4_repetition_stats",
-        "x4_text_stats", "x4_tfidf_topk", "x4_unigram_logprob",
-        "x4_vocab_coverage", "x5_chunked_pages", "x5_multimodal_meta",
-        "x5_resize_plan", "x6_decontaminate", "x6_deterministic_sample",
-        "x6_domain_mixture", "x6_group_split", "x6_hash_split",
-        "x6_priority_sample", "x6_stratified_sample", "x7_pack_documents",
-        "x8_zorder_values",
-    }
-    # j3_anti_join, set_except and s4_scan_pushdown were green in r1
-    # but with predicates that matched zero rows (vacuous parity);
-    # their round-2 non-empty rewrites count as never-checked.
-    - {"j3_anti_join", "set_except", "s4_scan_pushdown"}
-    # --- round 2 red, fixed + driver-certified green in round 3 ---
-    | {
-        "q1_quality_gate", "q4_profile", "x4_token_estimate",
-        "x4_bm25", "x4_bm25_table", "x3_embedding_pool",
-    }
-    # --- round 3 greens (CORRECTNESS_r03.json, all hash_match) ---
-    | _R03_GREEN
-    # --- round 4 greens (CORRECTNESS_r04.json: 50/50 hash_match,
-    # incl. the 7 recertified fixes and all 22 TPC-H shapes) ---
-    | {
-        "a30_spacesaving", "f_param_sql", "f_pipe_syntax",
-        "flagship_rag_context", "flagship_training_export",
-        "g3_recursive_bfs", "j3_anti_join", "j5_lateral_topk",
-        "q12_psi_drift", "s22_xml_roundtrip", "s23_binary_file",
-        "s4_scan_pushdown", "set_except", "skew4_hot_key_count",
-        "skew5_hot_key_join", "t27_stream_patterns",
-        "t29_stream_dataset_card", "tpch_q1", "tpch_q10", "tpch_q11",
-        "tpch_q12", "tpch_q13", "tpch_q14", "tpch_q15", "tpch_q16",
-        "tpch_q17", "tpch_q18", "tpch_q19", "tpch_q2", "tpch_q20",
-        "tpch_q21", "tpch_q22", "tpch_q3", "tpch_q4", "tpch_q5",
-        "tpch_q6", "tpch_q7", "tpch_q8", "tpch_q9",
-        "tpch_scalar_subquery", "u3_python_udtf", "w23_twap",
-        "w24_match_recognize", "w25_twap_gap_days", "w26_rolling_median",
-        "w7_sessionize", "x2_dup_ngram_frac", "x3_mrl_sweep",
-        "x6_temperature_mixture", "x7_dataset_card",
-    }
-    # --- round 5 greens (CORRECTNESS_r05.json: 50/50 hash_match —
-    # the 22 _NEW_R05 entries + the a12-a31/w11-w22/f_* tranche) ---
-    | {
-        "w27_match_alternation", "q15_chi2_drift", "w28_holt_linear",
-        "flagship_sensor_health", "w29_holt_mase", "x2_minhash_lsh",
-        "x2_simhash", "x3_ann_lsh", "x3_ivf_persisted", "x3_ivf_topk",
-        "x5_frame_sampling", "x5_multimodal_features",
-        "x7_length_buckets", "x3_ivf_bounded", "x4_rrf_fusion",
-        "x2_dup_span_removal", "x2_phonetic_blocking",
-        "t18_stream_lsh_index", "t30_stream_twap", "t31_stream_chi2",
-        "t33_stream_holt", "t32_stream_bm25", "a12_exact_stats",
-        "a14_histogram", "a15_cube", "a18_equidepth_hist",
-        "a16_retention", "a19_countmin", "a29_heavy_hitters",
-        "a22_bitmap_distinct", "a23_listagg", "a24_exact_corr",
-        "a25_exact_skew_kurt", "a26_mode", "a28_arg_minmax",
-        "a27_cohort_retention", "a31_weighted_median", "w11_gap_fill",
-        "w12_funnel", "w14_ewma", "w13_journey_pattern",
-        "w15_sax_words", "w16_sax_motif_pairs", "w19_sax_motif_capped",
-        "w17_trend_slope", "w18_window_distinct", "w20_capped_sessions",
-        "w22_bollinger", "f_hof_array", "f_string_extended",
-    }
-    # --- round 7 greens (CORRECTNESS_r07.json: 50/50 hash_match —
-    # the first all-hard-oracle window) ---
-    | _R07_GREEN
-    # --- round 8 greens (CORRECTNESS_r08.json: 48/48 oracle-backed
-    # hash_match; the 2 rows-only entries ran clean) ---
-    | _R08_GREEN
-    # --- round 9 greens (CORRECTNESS_r09.json: 50/50, zero errs) ---
-    | _R09_GREEN
-    # --- round 10 greens (CORRECTNESS_r10.json: 50/50, zero errs) ---
-    | _R10_GREEN
-    # --- round 11 greens (CORRECTNESS_r11.json: 50/50, zero errs) ---
-    | _R11_GREEN
-    # --- round 12 greens (CORRECTNESS_r12.json: 50/50, zero errs) ---
-    | _R12_GREEN
-    # --- round 6 greens (CORRECTNESS_r06.json: 44 hash_match + the
-    # 6 rows-only-by-design sketch/DTW/block entries) — named
-    # _R06_GREEN for the r13 staleness rotation ---
-    | _R06_GREEN
-)
-
-# Oldest-certified entries (round-1 greens still standing on their
-# r01 row): tier-2 re-verification candidates — whatever window
-# slots remain after the new/changed + never-checked tiers go to
-# these, oldest evidence first (VERDICT r05 item 1: "9 oldest-
-# certified re-verifications filling the window").
-_R01_GREEN: frozenset[str] = frozenset(
-    {
-        "flagship_gold_risk", "s2_json_decode", "s5_write_roundtrip",
-        "s7_csv_roundtrip", "s9_json_roundtrip",
-        "s10_synthetic_generator", "p1_project_rename",
-        "p2_derived_column", "p3_eq_filter", "p4_range_filter",
-        "p5_compound_filter", "p9_unpivot", "p6_in_filter",
-        "j1_cross_join", "j2_range_join_naive", "j2_range_join_grid",
-        "j2_range_join_band", "j3_equi_join_3way", "j3_semi_join",
-        "j3_outer_join", "a1_count_star", "a2_conditional_counts",
-        "a3_avg", "a4_groupby_count", "a5_distinct",
-        "a6_count_distinct", "a6_approx_count_distinct", "a7_summary",
-        "a8_rollup", "w1_latest_per_key", "w2_keep_best",
-        "w3_rolling_avg", "w4_lag_delta", "w5_rank", "w6_running_sum",
-        "o1_latest_events", "o3_topk_orders", "set_union",
-        "set_intersect", "f_case_when_chain", "f_math", "f_string",
-        "f_datetime", "f_null_handling", "f_random_generator",
-        "j4_asof_join", "m1_merge_upsert",
-    }
-)
-
-# Round-4 driver window greens (CORRECTNESS_r04.json): after round 9
-# refreshed the r03 body, these are the oldest-standing
-# certifications (6 rounds stale) — the round-10 staleness tranche.
-# Listed explicitly so the rotation can target exactly the rows
-# still standing on their r04 evidence (everything here absent from
-# every CORRECTNESS_r05..r09 window).
-_R04_STALE: frozenset[str] = frozenset(
-    {
-        "a30_spacesaving", "f_param_sql", "f_pipe_syntax",
-        "flagship_rag_context", "flagship_training_export",
-        "g3_recursive_bfs", "j3_anti_join", "j5_lateral_topk",
-        "q12_psi_drift", "s22_xml_roundtrip", "s23_binary_file",
-        "s4_scan_pushdown", "set_except", "skew4_hot_key_count",
-        "skew5_hot_key_join", "t27_stream_patterns",
-        "t29_stream_dataset_card", "tpch_q10", "tpch_q11", "tpch_q12",
-        "tpch_q13", "tpch_q14", "tpch_q15", "tpch_q16", "tpch_q17",
-        "tpch_q18", "tpch_q19", "tpch_q2", "tpch_q20", "tpch_q21",
-        "tpch_q22", "tpch_q4", "tpch_q5", "tpch_q6", "tpch_q7",
-        "tpch_q8", "tpch_q9", "tpch_scalar_subquery", "u3_python_udtf",
-        "w23_twap", "w24_match_recognize", "w25_twap_gap_days",
-        "w26_rolling_median", "w7_sessionize", "x2_dup_ngram_frac",
-        "x3_mrl_sweep", "x6_temperature_mixture", "x7_dataset_card",
-    }
-)
-
-# Entries whose LAST standing driver certification is round 2 —
-# discovered by a full-history staleness audit in round 10: the
-# r05-r09 rotations tracked the r01/r03/r04 tranches by name but the
-# r02 window's greens were only ever folded into _DRIVER_GREEN, so
-# these 39 are now the OLDEST standing rows in the corpus (8 rounds),
-# older than the r04 tranche the r09 verdict called next. They take
-# the staleness tier AHEAD of r03/r04.
-_R02_STALE: frozenset[str] = frozenset(
-    {
-        "flagship_text_pipeline", "q2_zscore_outliers",
-        "q3_iqr_outliers", "q5_expectations", "q6_seasonal_deviants",
-        "q7_winsorize", "q8_quantile_binning", "q9_cusum",
-        "x1_exact_dedup", "x1_hash_dedup_key", "x2_edit_distance",
-        "x2_ngram_jaccard", "x3_ivfpq_topk", "x3_pq_topk",
-        "x3_quantized_topk", "x4_chunk_documents", "x4_collocations",
-        "x4_fingerprint", "x4_lang_id", "x4_pii_scrub",
-        "x4_quality_classifier", "x4_quality_score",
-        "x4_repetition_signals", "x4_repetition_stats",
-        "x4_text_stats", "x4_tfidf_topk", "x4_unigram_logprob",
-        "x4_vocab_coverage", "x5_chunked_pages", "x5_multimodal_meta",
-        "x5_resize_plan", "x6_decontaminate",
-        "x6_deterministic_sample", "x6_domain_mixture",
-        "x6_hash_split", "x6_priority_sample", "x6_stratified_sample",
-        "x7_pack_documents", "x8_zorder_values",
-    }
-)
-
-# Last-certified-in-round-3 entries (the six t2x stream twins that
-# carried over round 9's window edge + the six entries fixed and
-# first certified in round 3) — the second-oldest standing rows.
-_R03_STALE: frozenset[str] = frozenset(
-    {
-        "q1_quality_gate", "q4_profile", "t21_cdf_incremental_agg",
-        "t22_stream_cdf", "t23_stream_psi", "t24_stream_ks",
-        "t25_stream_semdedup", "t26_stream_heavy_hitters",
-        "x3_embedding_pool", "x4_bm25", "x4_bm25_table",
-        "x4_token_estimate",
-    }
-)
-
-# Round-11 front tier: entries whose CODE or ORACLE changed that
-# round — changed code/oracle needs a fresh green row even though a
-# recent one exists (ADVICE r10 fixes, all four lows):
-#   - search_serving budget stage now derives n_tokens from the
-#     pinned postings (no corpus re-tokenize per request batch) —
-#     flagship #9 + the t47 twin;
-#   - bounded_winnowing_pairs pins its fingerprint index
-#     (localCheckpoint) before the hot/cold fan-out;
-#   - the RAKE/TextRank oracles interpolate the single-sourced
-#     STOPWORDS_SQL instead of re-hardcoding the list;
-#   - the aHash/pHash oracles use integer floor-division for cell
-#     boundaries (float floor diverges past 2^53).
-_NEW_R11: frozenset[str] = frozenset(
-    {
-        "flagship_search_serving",
-        "t47_stream_search_serving",
-        "x2_winnowing_bounded",
-        "x4_rake_keyphrases",
-        "x4_textrank_keywords",
-        "x5_image_ahash",
-        "x5_image_phash",
-        # r11 perf work, output-identical but code-path changed (the
-        # shared-build pins + the pHash map-side grid restore —
-        # already above): _shingle_pair_counts and the PPJoin
-        # shingle table now localCheckpoint before their three-way
-        # fan-outs, touching every consumer below (all re-verified
-        # exact locally at all three SFs).
-        "x2_ngram_jaccard",
-        "x2_containment",
-        "x2_dedup_clusters",
-        "x2_canonical_per_cluster",
-        "x6_group_split",
-        "x2_prefix_filter_jaccard",
-        # same pin applied to the two alias-below-the-exchange
-        # self-joins Spark can't ReusedExchange (minhash band table,
-        # winnowing fingerprint index).
-        "x2_minhash_lsh",
-        "x2_winnowing_pairs",
-    }
-)
-
-# Round-10 front tier (kept for the history audit): entries whose
-# code or oracle changed in round 10 — all 10 got fresh r10 greens.
-_NEW_R10: frozenset[str] = frozenset(
-    {
-        # ADVICE r09 medium: the binary NB weight table is now
-        # densified to the full bucket range on BOTH engines
-        # (selection.py:nb_log_odds + the oracle _nb_cte) — every
-        # consumer of the shared fragment needs a fresh row.
-        "x4_nb_log_odds",
-        "x4_nb_quality_gate",
-        "t41_stream_nb_gate",
-        "flagship_curation_select",
+        "a18_equidepth_hist",
+        "a31_weighted_median",
         "flagship_data_factory",
-        # VERDICT r09 item 3: the RAG flagship gained the MMR
-        # diversification stage between retrieval and dedup —
-        # code + oracle composition changed.
-        "flagship_rag_context",
-        # VERDICT r09 item 5 (sf1 audit): MERGE(lineitem) pins the
-        # fact-fact join to sort-merge in the three queries where
-        # the A/B won at both scales — query text changed (the hint
-        # is a comment to DuckDB, so each oracle is the same string).
-        "tpch_q3",
-        "tpch_q5",
-        "tpch_q12",
-        # r10: the operator body now routes through the split
-        # eval_shingle_set / decontaminate_against stages (t45's
-        # composition hooks) — code path changed, and its last green
-        # row is r02 anyway.
-        "x6_decontaminate",
+        "flagship_data_factory_nb",
+        "flagship_hybrid_serving",
+        "flagship_search_serving",
+        "flagship_tokenizer_pipeline",
+        "o4_distributed_global_rank",
+        "q11_ks_drift",
+        "t11_stream_stream_left_join",
+        "t19_stream_ann_ingest",
+        "t24_stream_ks",
+        "t25_stream_semdedup",
+        "t30_stream_twap",
+        "t32_stream_bm25",
+        "t33_stream_holt",
+        "t34_stream_hw_seasonal",
+        "t35_stream_dedup_clusters",
+        "t36_stream_bpe",
+        "t39_stream_wordpiece",
+        "t40_stream_wordpiece_infer",
+        "t46_stream_unimax",
+        "t47_stream_search_serving",
+        "t49_stream_hybrid_serving",
+        "t50_stream_hybrid_index",
+        "t52_stream_hybrid_loop",
+        "t53_stream_winnowing_incremental",
+        "w16_sax_motif_pairs",
+        "w19_sax_motif_capped",
+        "x2_phonetic_bounded",
+        "x2_snm_multipass",
+        "x2_sorted_neighborhood",
+        "x2_winnowing_bounded",
+        "x4_bm25",
+        "x4_bpe_merges",
+        "x4_bpe_segment",
+        "x4_bpe_token_count",
+        "x4_perplexity_buckets",
+        "x4_prf_expansion",
+        "x4_rrf_fusion",
+        "x4_wordpiece_merges",
+        "x4_wordpiece_segment",
+        "x4_wordpiece_token_count",
+        "x6_budget_select",
+        "x6_domain_mixture",
+        "x6_unimax_mixture",
+        "x7_curriculum",
     }
 )
 
 
-def _priority(name: str, has_oracle: bool) -> tuple[int, int, int]:
-    """Sort key for a windowed CORRECTNESS run (round 13 rotation,
-    VERDICT r12 item 1 + ADVICE r12 low 3).
+def correctness_rows(root: str) -> Iterator[tuple[int, str, dict]]:
+    """``(round, name, row)`` for every row of the
+    ``CORRECTNESS_r<round>.json`` certification files in ``root``."""
+    for fname in os.listdir(root):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if m is None:
+            continue
+        with open(os.path.join(root, fname)) as fh:
+            for name, row in json.load(fh).items():
+                if isinstance(row, dict):
+                    yield int(m.group(1)), name, row
 
-    After the r12 fold (which certified the whole 42-row r04 tail)
-    the full-history staleness audit (all twelve CORRECTNESS files)
-    leaves the 41-row r05 tail as the oldest standing tranche, then
-    the r06 window's rows. Order: (0) entries whose CODE changed —
-    the connected_components consumers ADVICE r12 flagged as missing
-    from the r12 front tier (their plans changed with the r12
-    _pin_round stats rebuild and changed again with the r13 fallback
-    broadening) plus x2_containment (shares the r12-changed
-    _shingle_pair_counts, likewise omitted); (1) anything never
-    driver-checked; (2) stale tiers strictly by evidence age: r05
-    tail, then the r06 tranche; (9) recently-certified entries last.
-    Registration order within a tier. Keep auditing staleness
-    against ALL CORRECTNESS files, not the previous round's note."""
-    refreshed = (
-        _R07_GREEN | _R08_GREEN | _R09_GREEN | _R10_GREEN | _R11_GREEN
-        | _R12_GREEN
-    )
-    if name in _NEW_R13:
-        return (0, 0, 0)
-    if name not in _DRIVER_GREEN:
-        fam = (
-            0 if name.startswith("f_") else
-            1 if name.startswith(("x2", "x3", "x4", "x5", "x6", "x7"))
-            else 2
+
+def is_green(row: dict, has_oracle: bool) -> bool:
+    """The certification pass verdict for one row. An entry with an
+    oracle needs rows, schema and hash to match; a rows-only entry is
+    recorded as ``err="no_oracle"`` and passes iff it produced rows."""
+    if has_oracle:
+        return all(
+            row.get(k) for k in ("rows_match", "schema_match", "hash_match")
         )
-        return (1, 0 if has_oracle else 1, fam)
-    if name in _R05_TAIL and name not in refreshed:
-        return (2, 0, 0)
-    # r06 staleness tier: the named r06 window plus the two entries
-    # tools/staleness_audit.py found whose LATEST green is also r06
-    # (they were folded via the r05 list but re-certified in r06 and
-    # never since)
-    if (
-        name in _R06_GREEN
-        or name in ("x7_length_buckets", "t18_stream_lsh_index")
-    ) and name not in refreshed:
-        return (2, 1, 0)
-    return (9, 0, 0)
+    return row.get("spark_rows") is not None and row.get("err") in (
+        None,
+        "no_oracle",
+    )
+
+
+def latest_green(oracle_names: Container[str], root: str) -> dict[str, int]:
+    """``{name: latest round with a green row}``; never-green entries
+    are absent."""
+    out: dict[str, int] = {}
+    for rnd, name, row in correctness_rows(root):
+        if rnd > out.get(name, 0) and is_green(row, name in oracle_names):
+            out[name] = rnd
+    return out
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -636,9 +130,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if overlap:
             raise ValueError(f"duplicate corpus query names: {overlap}")
         out.update(m.QUERIES)
-    oracles = oracle_sql().keys()
-    # Stable sort: priority tiers, registration order within a tier.
-    names = sorted(out, key=lambda n: _priority(n, n in oracles))
+    # Correctness-window order: changed code first, then the oldest
+    # evidence (never checked = round 0). The sort is stable, so
+    # registration order holds within a round.
+    age = latest_green(oracle_sql().keys(), _REPO)
+    names = sorted(out, key=lambda n: (n not in CHANGED, age.get(n, 0)))
     return {k: out[k] for k in names}
 
 

@@ -11,21 +11,20 @@ controls do), the swing was mixed-run/host state; if a suspect stays
 inflated while controls sit at their records, it's a real plan/code
 regression.
 
-Round 13 target set (VERDICT r12 item 2, the two perf watch items —
-neither had code changes in r12/r13):
-- w16_sax_motif_pairs: r12 p50 drifted 5.22 -> 7.26 normalized
-  (p95 12.3) but its min-run 5.49 ~= the r11 level and the plan
-  (timeseries.py SAX-bucket equi-join + HOF refine) is unchanged —
-  hypothesis: the documented host heavy-tail. Record band 5.2.
-- x6_budget_select: bounced 2.6-4.5 normalized across r12 runs
-  (1.86 in the final clean run; isolated r12 verdict 0.95x of the
-  r10 record 2.77, twice-vindicated). Record band 2.77.
+Round 14 target set (VERDICT r13 item 3):
+- flagship_hybrid_serving (suspect): touched in r13, then read 5.84 s
+  in the r13 one-off bench run against its r12-era record
+  band. Record band 4.116.
+- x4_bm25, x3_cosine_topk, x4_prf_expansion: untouched controls
+  timed in the same JVM.
+The round-13 run (w16_sax_motif_pairs and x6_budget_select against
+three controls) is kept in BENCH_DETAIL.isolated_rebench_r13.
 
 Records compared are HOST-NORMALIZED p50s (queries_norm from the
 shipped BENCH_DETAIL maps), so the host-speed swing between those
 runs and this one cancels.
 
-Writes `isolated_rebench_r13` into BENCH_DETAIL.json (merge, never
+Writes `isolated_rebench_r14` into BENCH_DETAIL.json (merge, never
 overwrite — the sidecar holds other tools' sections).
 
 Run:  python tools/isolated_rebench.py    (never alongside another
@@ -51,23 +50,25 @@ from bench import (  # noqa: E402
     stage_silver,
 )
 
-# (name, is_suspect, record-band NORM p50, latest suspect NORM p50)
-# — record bands from the shipped queries_norm history (w16: the
-# r11 level its r12 min-run still matched; budget_select: the r10
-# record its r12 isolated verdict sat at 0.95x of); latest = the
-# shipped r12 final-run p50 (w16) / the top of the r12 observed
-# band (budget_select, which bounced 2.6-4.5 across r12 runs).
+# (name, is_suspect, record-band NORM p50, latest NORM p50)
+# — both from the shipped queries_norm history.
 QUERIES = [
-    ("w16_sax_motif_pairs", True, 5.216, 7.257),
-    ("x6_budget_select", True, 2.771, 4.500),
-    ("tpch_q1", False, 0.241, 0.241),
-    ("a7_summary", False, 0.457, 0.554),
-    ("x4_bm25", False, 1.910, 1.939),
+    # flagship_hybrid_serving: touched in r13 (46->30-class Exchange
+    # cut) yet read 5.84 raw in the one-off bench run / 6.76 norm in
+    # the r13 closing run vs its r12-era ~4.3-4.4 record band. VERDICT
+    # r13 item 3: adjudicate on a clean window with untouched
+    # controls. Record = the r14 opening clean-window full bench
+    # (4.116 norm at probe 0.544, commit 2d75ea5), which already sat
+    # back in the r12 band; last = the r13 one-off run normalized.
+    ("flagship_hybrid_serving", True, 4.116, 5.841),
+    ("x4_bm25", False, 1.252, 1.289),
+    ("x3_cosine_topk", False, 0.469, 0.572),
+    ("x4_prf_expansion", False, 2.718, 2.638),
 ]
 N_RUNS = 5
-SECTION = "isolated_rebench_r13"
+SECTION = "isolated_rebench_r14"
 PREV_KEY = "record"  # the record band suspects must return to
-LAST_KEY = "r12"  # the inflated round under adjudication
+LAST_KEY = "r13"  # the inflated round under adjudication
 
 
 def main() -> None:
@@ -154,14 +155,14 @@ def main() -> None:
 
     section = {
         "note": (
-            "clean-JVM isolated re-run of the two r12 perf watch "
-            "items (w16 p50 drift, budget_select band) + 3 untouched "
-            "controls "
+            "clean-JVM isolated re-run of "
+            f"{sum(q[1] for q in QUERIES)} suspect(s) + "
+            f"{sum(not q[1] for q in QUERIES)} untouched controls "
             f"({N_RUNS} timed runs x 2 interleaved passes each after "
             "warm-up; best-pass p50, 3-probe mean normalization; "
             "release_cached_state between entries = the r12 bench "
             f"hygiene); suspect verdicts compare to the {PREV_KEY} "
-            "record band, bounded by control inflation"
+            "band, bounded by control inflation"
         ),
         "host_probe_start": probe_start,
         "host_probe_mid": probe_mid,

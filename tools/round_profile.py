@@ -1,13 +1,15 @@
-"""Round-14 optimization profiler: isolate named corpus entries.
+"""Per-round optimization profiler: isolate named corpus entries.
 
 For each requested entry: 1 untimed warm-up + N timed noop-sink runs
 (bench methodology — same silver staging, same release_cached_state
 between entries) and the ``explain("formatted")`` plan captured to
-``plans/r14/<name>_<suffix>.txt`` (the judge-facing before/after
-evidence for OPTIMIZATION_r14.md).
+``plans/<round>/<name>_<suffix>.txt`` (the before/after evidence for
+OPTIMIZATION_<round>.md). The final JSON line carries the timings
+under ``<round>_profile``.
 
-Run:  python tools/r14_profile.py [--suffix before|after] [--runs N]
-          [--no-plans] name [name ...]
+Run:  python tools/round_profile.py <round> [--suffix before|after]
+          [--runs N] [--no-plans] name [name ...]
+      e.g. python tools/round_profile.py r15 x4_bm25
 Never alongside another Spark JVM (memory: env-gates-and-testdata).
 """
 
@@ -35,6 +37,7 @@ from bench import (  # noqa: E402
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("round", help="round tag, e.g. r15")
     ap.add_argument("names", nargs="+")
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--runs", type=int, default=5)
@@ -48,7 +51,7 @@ def main() -> None:
 
     from eco_pulse_lakehouse_spark.session import get_session
 
-    spark = get_session("eco-pulse-r14-profile")
+    spark = get_session(f"eco-pulse-{args.round}-profile")
     import __spark_entry__ as entry
 
     qs = entry.queries()
@@ -60,13 +63,13 @@ def main() -> None:
 
     ensure_silver_database(spark, sf_dir)
 
-    plans_dir = os.path.join(REPO, "plans", "r14")
+    plans_dir = os.path.join(REPO, "plans", args.round)
     os.makedirs(plans_dir, exist_ok=True)
 
     out: dict[str, dict] = {}
     for name in args.names:
         fn = qs[name]
-        spark.sparkContext.setJobDescription(f"r14-profile:{name}")
+        spark.sparkContext.setJobDescription(f"{args.round}-profile:{name}")
         if not args.no_plans:
             df = fn(spark, sf_dir)
             buf = io.StringIO()
@@ -104,7 +107,7 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "r14_profile": out,
+                f"{args.round}_profile": out,
                 "suffix": args.suffix,
                 "host_probe_start": probe_start,
                 "host_probe_end": probe_end,

@@ -5,22 +5,19 @@ be computed against ALL CORRECTNESS_r*.json files, not the previous
 round's note — the r10 session discovered 39 entries silently
 standing on r02 rows because the r02 greens never got a named tier.
 
-Reads every CORRECTNESS file in the repo root, computes each
-registry entry's LATEST green round (a green row = rows_match AND
-schema_match AND (hash_match OR the entry is rows-only by design,
-i.e. absent from oracle_sql)), and prints:
+Reads every CORRECTNESS file in the repo root through the registry's
+own evidence functions (``corpus.latest_green`` / ``corpus.is_green``,
+the ones ``queries()`` orders the window by, so the audit and the
+window cannot disagree) and prints:
 
   1. the staleness histogram (entries per latest-green round);
-  2. the oldest tranches, entry by entry, in registration order —
-     the data the next rotation's stale tiers are built from;
+  2. the oldest tranches, entry by entry, in window order;
   3. never-checked entries (must lead the window);
   4. entries whose latest row was RED or errored (must be
      investigated, not rotated);
-  5. a drift check of the LIVE window order: the first 50 names
-     queries() currently emits, annotated with their evidence age,
-     flagging any stale-tier entry ordered BEHIND a fresher one
-     (front-tier code-change entries are expected to be "fresh yet
-     first" — listed, not flagged).
+  5. the first 50 names queries() currently emits, annotated with
+     their evidence age (the ``corpus.CHANGED`` front tier is fresh
+     yet first by design).
 
 No Spark session is started — the registry import is metadata-only.
 
@@ -29,10 +26,8 @@ Run: python tools/staleness_audit.py [--json]
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 from collections import Counter
 
@@ -40,73 +35,44 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def load_history() -> dict[str, list[tuple[int, bool, dict]]]:
-    """name -> [(round, green, row), ...] sorted by round."""
-    hist: dict[str, list[tuple[int, bool, dict]]] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1))
-        data = json.load(open(path))
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            green = bool(row.get("rows_match")) and bool(
-                row.get("schema_match")
-            )
-            # hash requirement applied later (needs oracle knowledge)
-            hist.setdefault(name, []).append((rnd, green, row))
-    for rows in hist.values():
-        rows.sort(key=lambda t: t[0])
-    return hist
-
-
-def main() -> None:
-    as_json = "--json" in sys.argv
-
+def audit() -> dict:
+    """The audit report as a dict (``--json`` prints it as is)."""
     from eco_pulse_lakehouse_spark import corpus
 
     qs = list(corpus.queries())  # live window order
+    registered = set(qs)
     oracle_names = set(corpus.oracle_sql())
-    hist = load_history()
+    latest_green = {
+        n: r
+        for n, r in corpus.latest_green(oracle_names, REPO).items()
+        if n in registered
+    }
 
-    def is_green(name: str, green: bool, row: dict) -> bool:
-        if name not in oracle_names:
-            # rows-only by design: the driver records the weaker
-            # ran-and-produced-rows check as rows_match=null +
-            # err="no_oracle" — green iff it ran
-            return row.get("spark_rows") is not None and row.get("err") in (
-                None,
-                "no_oracle",
-            )
-        return green and bool(row.get("hash_match"))
-
-    latest_green: dict[str, int] = {}
+    latest_row: dict[str, tuple[int, dict]] = {}
+    for rnd, name, row in corpus.correctness_rows(REPO):
+        if rnd >= latest_row.get(name, (0, None))[0]:
+            latest_row[name] = (rnd, row)
     latest_red: dict[str, tuple[int, str]] = {}
     for name in qs:
-        for rnd, green, row in hist.get(name, []):
-            if is_green(name, green, row):
-                latest_green[name] = rnd
-        rows = hist.get(name, [])
-        if rows:
-            rnd, green, row = rows[-1]
-            if not is_green(name, green, row):
-                latest_red[name] = (
-                    rnd,
-                    str(row.get("err"))[:80] if row.get("err") else
-                    "rows/schema/hash mismatch",
-                )
+        if name not in latest_row:
+            continue
+        rnd, row = latest_row[name]
+        if not corpus.is_green(row, name in oracle_names):
+            latest_red[name] = (
+                rnd,
+                str(row.get("err"))[:80] if row.get("err") else
+                "rows/schema/hash mismatch",
+            )
 
     never = [n for n in qs if n not in latest_green and n not in latest_red]
     histo = Counter(latest_green.values())
 
-    # tranches, oldest first, registration order within
+    # tranches, oldest first, window order within
     tranches: dict[int, list[str]] = {}
     for n in qs:
         if n in latest_green:
             tranches.setdefault(latest_green[n], []).append(n)
 
-    # window drift check over the first 50: a stale entry ordered
-    # behind a fresher NON-front entry means the rotation decayed
     window = qs[:50]
     ages = [latest_green.get(n) for n in window]
     flags = []
@@ -150,27 +116,32 @@ def main() -> None:
             "investigate before rotating them out"
         )
     out["flags"] = flags
+    return out
 
-    if as_json:
+
+def main() -> None:
+    out = audit()
+    if "--json" in sys.argv:
         print(json.dumps(out, indent=1))
         return
-    print(f"registry entries: {len(qs)}")
+    never, latest_red = out["never_checked"], out["latest_red"]
+    print(f"registry entries: {out['n_entries']}")
     print(f"never checked: {len(never)}" + (f" — {never}" if never else ""))
     print("latest row red/errored:", len(latest_red))
     for n, (rnd, why) in sorted(latest_red.items()):
         print(f"  r{rnd:02d} {n}: {why}")
     print("staleness histogram (latest green round -> entries):")
-    for rnd in sorted(histo):
-        print(f"  r{rnd:02d}: {histo[rnd]}")
+    for rnd, count in out["staleness_histogram"].items():
+        print(f"  r{int(rnd):02d}: {count}")
     print("oldest tranches:")
-    for rnd in sorted(tranches)[:3]:
-        print(f"  r{rnd:02d} ({len(tranches[rnd])}): {tranches[rnd]}")
+    for rnd, names in out["oldest_tranches"].items():
+        print(f"  r{int(rnd):02d} ({len(names)}): {names}")
     print("first-50 window evidence ages (None = never checked):")
-    for n, a in zip(window, ages):
+    for n, a in out["window_first50_ages"].items():
         print(f"  {('r%02d' % a) if a else '----'} {n}")
     n_beyond = len(out["stale_entries_beyond_window"])
     print(f"oldest-tranche entries beyond the window: {n_beyond}")
-    for f in flags:
+    for f in out["flags"]:
         print("FLAG:", f)
 
 
