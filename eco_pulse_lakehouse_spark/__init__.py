@@ -11,8 +11,8 @@ Design principles (see SURVEY.md):
   * No row-at-a-time Python UDFs on the hot path; Arrow-batched
     pandas UDFs only where built-ins can't express the semantics.
   * Broadcast small dims, grid-bucket spatial joins, AQE on.
-  * Parquet storage (Delta jars absent in this image; the Delta
-    path is gated behind an import-try in sources/delta_io.py).
+  * Parquet storage (the reference's Delta tables are the
+    exactly-once upgrade path; delta-spark is not installed here).
 """
 
 from eco_pulse_lakehouse_spark.session import get_session

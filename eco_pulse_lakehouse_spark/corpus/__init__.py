@@ -44,24 +44,54 @@ CHANGED: frozenset[str] = frozenset(
         "flagship_tokenizer_pipeline",
         "o4_distributed_global_rank",
         "q11_ks_drift",
+        "s20_versioned_history",
+        "t10_stream_stream_join",
         "t11_stream_stream_left_join",
+        "t12_python_stream_source",
+        "t13_chained_windows",
+        "t14_sliding_windows",
+        "t15_stream_reassembly",
+        "t16_stream_fanout",
+        "t17_stream_countmin",
+        "t18_stream_lsh_index",
         "t19_stream_ann_ingest",
+        "t20_stream_versioned_gold",
+        "t21_cdf_incremental_agg",
+        "t22_stream_cdf",
+        "t23_stream_psi",
         "t24_stream_ks",
         "t25_stream_semdedup",
+        "t26_stream_heavy_hitters",
+        "t27_stream_patterns",
+        "t29_stream_dataset_card",
         "t30_stream_twap",
+        "t31_stream_chi2",
         "t32_stream_bm25",
         "t33_stream_holt",
         "t34_stream_hw_seasonal",
         "t35_stream_dedup_clusters",
         "t36_stream_bpe",
+        "t37_stream_dsir",
+        "t38_stream_line_dedup",
         "t39_stream_wordpiece",
+        "t3_stream_append_silver",
         "t40_stream_wordpiece_infer",
+        "t41_stream_nb_gate",
+        "t42_stream_gold_topk",
+        "t43_stream_rag_context",
+        "t44_stream_nb_gate_sweep",
+        "t45_stream_decontaminate",
         "t46_stream_unimax",
         "t47_stream_search_serving",
+        "t48_stream_winnowing",
         "t49_stream_hybrid_serving",
         "t50_stream_hybrid_index",
+        "t51_stream_winnowing_clusters",
         "t52_stream_hybrid_loop",
         "t53_stream_winnowing_incremental",
+        "t5_stream_dedup",
+        "t6_stream_windowed_counts",
+        "t8_stream_static_join",
         "w16_sax_motif_pairs",
         "w19_sax_motif_capped",
         "x2_phonetic_bounded",

@@ -1,15 +1,25 @@
 """Streaming corpus — T-rows (SURVEY.md §2.9), hermetically.
 
-Each entry stages the synthetic ``events`` table into a temp
-directory, streams it back through a file source (the Kafka
-stand-in: same unbounded-append semantics), runs the streaming
-pipeline to completion with an ``availableNow`` trigger, and returns
-the materialized result as a batch DataFrame — so the driver can
+Each entry stages its input table into a temp directory, streams it
+back through a file source (the Kafka stand-in: same unbounded-append
+semantics), drains the stream to completion and returns the
+materialized result as a batch DataFrame — so the driver can
 oracle-check STREAMING semantics against plain SQL.
 
-Fresh uuid sink/checkpoint dirs per call keep replays honest
-(checkpoint reuse semantics are pinned separately in
-tests/test_streaming.py).
+Three helpers carry the loop machinery, so each entry keeps only its
+batch body, its sink layout and its serve-side read:
+
+* ``sp.drain(stream, fn, checkpoint)`` (streaming/pipeline.py) runs
+  a foreachBatch body under the one drain policy — sources read with
+  ``max_files_per_trigger=1`` deliver one committed file per batch,
+  in commit order — and ``sp.run_to_parquet`` / ``sp.run_to_memory``
+  do the same for plain sinks;
+* ``_scratch(tag)`` names a fresh uuid stage/sink/checkpoint path, so
+  replays stay honest (checkpoint reuse is pinned separately in
+  tests/test_streaming.py);
+* ``_epoch_state(spark, root, schema, before)`` reads the carried
+  state of an epoch-keyed fold: the latest ``epoch=<n>`` before the
+  current batch, so a replayed batch never reads its own partial.
 """
 
 from __future__ import annotations
@@ -44,6 +54,14 @@ _STAGE_CACHE: dict[tuple, str] = {}
 _DAY_MS = 86_400_000
 
 
+def _scratch(tag: str, key: str | None = None) -> str:
+    """A temp path ``eco_pulse_<tag>_<uuid hex>`` that does not exist
+    yet. ``key`` replaces the uuid for the per-scale-factor versioned
+    tables that are built once and then reused."""
+    name = f"eco_pulse_{tag}_{key or uuid.uuid4().hex}"
+    return os.path.join(tempfile.gettempdir(), name)
+
+
 def _epochs(root: str) -> list[int]:
     """Sorted numeric epoch ids under ``root/epoch=<digits>``.
 
@@ -60,6 +78,23 @@ def _epochs(root: str) -> list[int]:
         if suffix.isdigit():
             out.append(int(suffix))
     return sorted(out)
+
+
+def _epoch_state(spark, root: str, schema, before: int | None = None):
+    """The carried state of an epoch-keyed fold: the frame under the
+    latest ``root/epoch=<n>`` with ``n < before`` (the last epoch
+    when ``before`` is None), or an empty ``schema`` frame when there
+    is none. A batch passes its own id as ``before``, so a replayed
+    batch reads the same predecessor state as its first attempt and
+    never its own partial epoch."""
+    prev = [e for e in _epochs(root) if before is None or e < before]
+    if not prev:
+        return local_frame(spark, [], schema)
+    return spark.read.parquet(os.path.join(root, f"epoch={prev[-1]}"))
+
+
+# state schema of the connected-component label folds (t35, t53)
+_LABELS = "id BIGINT, comp BIGINT"
 
 
 def _div_day(x):
@@ -125,9 +160,7 @@ def _stage_events(spark, sf_dir: str, copies: int = 1, parts: int = 4) -> str:
     cached = _STAGE_CACHE.get(key)
     if cached and os.path.exists(cached):
         return cached
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_stream_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("stream")
     ev = T(spark, sf_dir, "events").repartition(parts)
     ev.write.mode("overwrite").parquet(stage)
     for _ in range(copies - 1):
@@ -171,7 +204,7 @@ def t5_stream_dedup(spark, sf_dir):
     silver = sp.to_silver(
         stream, "ts", ["event_id"], watermark="10 minutes", with_processed_at=False
     )
-    sink = os.path.join(tempfile.gettempdir(), f"eco_pulse_sink_{uuid.uuid4().hex}")
+    sink = _scratch("sink")
     # state partitions sized to the data (~12k dedup keys/partition at
     # sf0.1), NOT the batch shuffle default: 32 near-empty state
     # stores spend more per batch committing deltas than deduplicating
@@ -227,7 +260,7 @@ def t10_stream_stream_join(spark, sf_dir):
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("c_ts") <= F.col("p_ts")),
     ).select("purchase_id", "click_id", "user_id", "purchase_value")
-    sink = os.path.join(tempfile.gettempdir(), f"eco_pulse_sink_{uuid.uuid4().hex}")
+    sink = _scratch("sink")
     sp.run_to_parquet(joined, sink)
     return spark.read.parquet(sink)
 
@@ -250,9 +283,7 @@ def _stage_events_with_wm_sentinels(spark, sf_dir: str) -> str:
         return cached
     import datetime
 
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_stream_wm_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("stream_wm")
     ev = T(spark, sf_dir, "events")
     ev.coalesce(1).write.mode("overwrite").parquet(stage)
     max_ts = ev.agg(F.max("ts")).collect()[0][0]
@@ -295,11 +326,8 @@ def t11_stream_stream_left_join(spark, sf_dir):
     last 2 h of purchases are silently never emitted).
     """
     stage = _stage_events_with_wm_sentinels(spark, sf_dir)
-    src = (
-        spark.readStream.format("parquet")
-        .schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .load(stage)
+    src = sp.read_file_stream(
+        spark, stage, EVENTS_SCHEMA, max_files_per_trigger=1
     )
     left = (
         src.filter(F.col("event_type") == "purchase")
@@ -327,7 +355,7 @@ def t11_stream_stream_left_join(spark, sf_dir):
         & (F.col("c_ts") <= F.col("p_ts")),
         "leftOuter",
     ).select("purchase_id", "click_id", "user_id", "purchase_value")
-    sink = os.path.join(tempfile.gettempdir(), f"eco_pulse_sink_{uuid.uuid4().hex}")
+    sink = _scratch("sink")
     sp.run_to_parquet(joined, sink)
     return spark.read.parquet(sink).filter(F.col("user_id") >= 0)
 
@@ -383,7 +411,7 @@ def t8_stream_static_join(spark, sf_dir):
         .join(F.broadcast(dim), F.col("user_id") == F.col("c_custkey"))
         .select("event_id", "user_id", "value", "c_name", "c_mktsegment")
     )
-    sink = os.path.join(tempfile.gettempdir(), f"eco_pulse_sink_{uuid.uuid4().hex}")
+    sink = _scratch("sink")
     sp.run_to_parquet(joined, sink)
     return spark.read.parquet(sink)
 
@@ -407,7 +435,7 @@ def t3_stream_append_silver(spark, sf_dir):
         .withColumn("data", F.from_json(F.col("props").cast("string"), "k BIGINT"))
         .select("event_id", "user_id", "value", F.col("data.k").alias("k"))
     )
-    sink = os.path.join(tempfile.gettempdir(), f"eco_pulse_sink_{uuid.uuid4().hex}")
+    sink = _scratch("sink")
     sp.run_to_parquet(silver, sink)
     return spark.read.parquet(sink)
 
@@ -442,9 +470,7 @@ def t12_python_stream_source(spark, sf_dir):
     out = _T12_CACHE.get("out")
     if not (out and os.path.exists(out)):
         pydatasource.register(spark)
-        base = os.path.join(
-            tempfile.gettempdir(), f"eco_pulse_t12_{uuid.uuid4().hex}"
-        )
+        base = _scratch("t12")
         out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
         stream = (
             spark.readStream.format("eco_synthetic")
@@ -453,14 +479,7 @@ def t12_python_stream_source(spark, sf_dir):
             .load()
         )
         for _ in range(3):
-            q_ = (
-                stream.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q_.awaitTermination()
+            sp.run_to_parquet(stream, out, checkpoint=ck)
         _T12_CACHE["out"] = out
     return (
         spark.read.parquet(out)
@@ -567,9 +586,7 @@ def t15_stream_reassembly(spark, sf_dir):
             F.col("doc_id").cast("bigint"), "text"
         )
         chunks = chunk_payloads(to_multimodal(docs), page_bytes=64)
-        stage = os.path.join(
-            tempfile.gettempdir(), f"eco_pulse_chunks_{uuid.uuid4().hex}"
-        )
+        stage = _scratch("chunks")
         # shuffle pages across files so a doc's pages land in
         # different micro-batches (repartition hash-scatters rows)
         chunks.repartition(8).write.mode("overwrite").parquet(stage)
@@ -606,8 +623,6 @@ def t16_stream_fanout(spark, sf_dir):
     DETAIL sink against the source table: fan-out must lose or
     duplicate nothing; metrics-sink consistency (Σn == |events|) is
     pinned in pytest."""
-    import tempfile
-
     from eco_pulse_lakehouse_spark.streaming.stateful import (
         foreach_batch_fanout,
     )
@@ -616,16 +631,13 @@ def t16_stream_fanout(spark, sf_dir):
     stream = sp.read_file_stream(
         spark, stage, EVENTS_SCHEMA, max_files_per_trigger=2
     ).select("event_id", "user_id", "value")
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_fanout_{uuid.uuid4().hex}"
-    )
-    q_ = foreach_batch_fanout(
+    base = _scratch("fanout")
+    foreach_batch_fanout(
         stream,
         f"{base}/detail",
         f"{base}/metrics",
         checkpoint=f"{base}/ckpt",
     )
-    q_.awaitTermination()
     return spark.read.parquet(f"{base}/detail").select(
         "event_id", "user_id", F.round("value", 6).alias("value")
     )
@@ -679,20 +691,14 @@ def t17_stream_countmin(spark, sf_dir):
     from eco_pulse_lakehouse_spark.operators import sketches as sk
 
     docs = T(spark, sf_dir, "documents")
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t17_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t17")
     docs.repartition(4).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t17_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t17_out")
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
 
     def land_partial(batch_df, batch_id: int) -> None:
@@ -701,13 +707,7 @@ def t17_stream_countmin(spark, sf_dir):
             "overwrite"
         ).parquet(os.path.join(sink, f"batch={batch_id}"))
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_partial)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_partial, ck)
 
     sketch = (
         spark.read.parquet(os.path.join(sink, "batch=*"))
@@ -743,20 +743,14 @@ def t18_stream_lsh_index(spark, sf_dir):
     )
 
     docs = T(spark, sf_dir, "documents")
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t18_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t18")
     docs.repartition(4).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t18_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t18_out")
     sink, ck = os.path.join(base, "index"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
 
     def land_bands(batch_df, batch_id: int) -> None:
@@ -766,13 +760,7 @@ def t18_stream_lsh_index(spark, sf_dir):
             os.path.join(sink, f"batch={batch_id}")
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_bands)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_bands, ck)
 
     idx = spark.read.parquet(os.path.join(sink, "batch=*"))
     a = idx.select(F.col("doc_id").alias("id_a"), "band", "bh")
@@ -902,19 +890,13 @@ def t19_stream_ann_ingest(spark, sf_dir):
     coarse = local_frame(spark, coarse_df.collect(), coarse_df.schema)
     rcb = local_frame(spark, rcb_df.collect(), rcb_df.schema)
 
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t19_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t19")
     e.repartition(4).write.mode("overwrite").parquet(stage)
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t19_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t19_out")
     sink, ck = os.path.join(base, "enc"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, e.schema, max_files_per_trigger=1
     )
 
     def land_encoded(batch_df, batch_id: int) -> None:
@@ -923,13 +905,7 @@ def t19_stream_ann_ingest(spark, sf_dir):
             "overwrite"
         ).parquet(os.path.join(sink, f"batch={batch_id}"))
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_encoded)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_encoded, ck)
 
     enc = spark.read.parquet(os.path.join(sink, "batch=*"))
     qs_ = qz.filter(F.col("vec_id") < 10).select(
@@ -965,9 +941,7 @@ def t20_stream_versioned_gold(spark, sf_dir):
     ev = T(spark, sf_dir, "events")
     stage = _stage_events(spark, sf_dir)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t20_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t20")
     gold, ck = os.path.join(base, "gold"), os.path.join(base, "ck")
 
     stream = sp.read_file_stream(spark, stage, EVENTS_SCHEMA)
@@ -1012,13 +986,7 @@ def t20_stream_versioned_gold(spark, sf_dir):
             combined = agg
         versioned.write_version(combined, gold, meta={"batch_id": batch_id})
 
-    q_ = (
-        stream.writeStream.foreachBatch(accumulate)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, accumulate, ck)
     return versioned.read_version(spark, gold)
 
 
@@ -1050,10 +1018,7 @@ def t21_cdf_incremental_agg(spark, sf_dir):
     via the maintained count, matching the direct aggregate."""
     from eco_pulse_lakehouse_spark.sources import versioned
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"eco_pulse_t21_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    path = _scratch("t21", os.path.basename(sf_dir.rstrip("/")))
     base = T(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -1098,10 +1063,7 @@ def s20_versioned_history(spark, sf_dir):
     The oracle rebuilds the same union with an explicit NULL cast."""
     from eco_pulse_lakehouse_spark.sources import versioned
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"eco_pulse_s20_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    path = _scratch("s20", os.path.basename(sf_dir.rstrip("/")))
     ev = T(spark, sf_dir, "events").filter(F.col("event_id") % 53 == 0)
     if not versioned.versions(path):
         versioned.write_version(ev.select("event_id", "value"), path)
@@ -1160,10 +1122,7 @@ def t22_stream_cdf(spark, sf_dir):
     the batch table_changes (s17) it is derived from."""
     from eco_pulse_lakehouse_spark.sources import versioned
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"eco_pulse_t22_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    path = _scratch("t22", os.path.basename(sf_dir.rstrip("/")))
     base = T(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -1184,21 +1143,12 @@ def t22_stream_cdf(spark, sf_dir):
         versioned.write_version(v2, path)
     versioned.materialize_changes(spark, path)
 
-    out = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t22_out_{uuid.uuid4().hex}"
-    )
+    out = _scratch("t22_out")
     sink, ck = os.path.join(out, "sink"), os.path.join(out, "ck")
     stream = versioned.read_changes_stream(
         spark, path, maxFilesPerTrigger=1
     )
-    q_ = (
-        stream.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.run_to_parquet(stream, sink, checkpoint=ck)
     drained = spark.read.parquet(sink)
     return drained.groupBy(
         "_commit_version", "_change_type", "event_type"
@@ -1249,15 +1199,11 @@ def t23_stream_psi(spark, sf_dir):
     from eco_pulse_lakehouse_spark.operators.anomaly import psi_from_bins
 
     stage = _stage_events(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t23_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t23_out")
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, EVENTS_SCHEMA, max_files_per_trigger=1
     )
 
     def land_partial(batch_df, batch_id: int) -> None:
@@ -1281,13 +1227,7 @@ def t23_stream_psi(spark, sf_dir):
             os.path.join(sink, f"batch={batch_id}")
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_partial)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_partial, ck)
 
     merged = (
         spark.read.parquet(os.path.join(sink, "batch=*"))
@@ -1340,15 +1280,11 @@ def t24_stream_ks(spark, sf_dir):
     )
 
     stage = _stage_events(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t24_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t24_out")
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, EVENTS_SCHEMA, max_files_per_trigger=1
     )
 
     def land_partial(batch_df, batch_id: int) -> None:
@@ -1368,13 +1304,7 @@ def t24_stream_ks(spark, sf_dir):
             os.path.join(sink, f"batch={batch_id}")
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_partial)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_partial, ck)
 
     merged = (
         spark.read.parquet(os.path.join(sink, "batch=*"))
@@ -1455,13 +1385,9 @@ def t25_stream_semdedup(spark, sf_dir):
     )
     coarse = local_frame(spark, coarse_df.collect(), coarse_df.schema)
 
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t25_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t25")
     e.repartition(4).write.mode("overwrite").parquet(stage)
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t25_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t25_out")
     store = os.path.join(base, "scored")
     dsink = os.path.join(base, "drops")
     ck = os.path.join(base, "ck")
@@ -1492,18 +1418,10 @@ def t25_stream_semdedup(spark, sf_dir):
             os.path.join(store, f"batch={batch_id}")
         )
 
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, e.schema, max_files_per_trigger=1
     )
-    q_ = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, ingest, ck)
 
     all_scored = spark.read.parquet(os.path.join(store, "batch=*"))
     all_drops = spark.read.parquet(
@@ -1542,13 +1460,9 @@ def t26_stream_heavy_hitters(spark, sf_dir):
     from eco_pulse_lakehouse_spark.operators import sketches as sk
 
     docs = T(spark, sf_dir, "documents")
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t26_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t26")
     docs.repartition(4).write.mode("overwrite").parquet(stage)
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t26_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t26_out")
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
 
     bigrams = lambda df: df.select(  # noqa: E731
@@ -1568,18 +1482,10 @@ def t26_stream_heavy_hitters(spark, sf_dir):
             os.path.join(sink, f"batch={batch_id}")
         )
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
-    q_ = (
-        stream.writeStream.foreachBatch(land_partial)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_partial, ck)
 
     merged = (
         spark.read.parquet(os.path.join(sink, "batch=*"))
@@ -1765,9 +1671,7 @@ def t30_stream_twap(spark, sf_dir):
         F.col("event_id").cast("bigint").alias("event_id"),
         F.round(F.col("value") * 10000, 0).cast("bigint").alias("v_fp"),
     )
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t30_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t30")
     feed = _stage_ordered_day_feed(ev, base)
 
     part_root = os.path.join(base, "partials")
@@ -1776,13 +1680,7 @@ def t30_stream_twap(spark, sf_dir):
 
     def fold(batch_df, batch_id: int) -> None:
         sp_ = batch_df.sparkSession
-        prev = [e for e in _epochs(state_root) if e < batch_id]
-        if prev:
-            prior = sp_.read.parquet(
-                os.path.join(state_root, f"epoch={prev[-1]}")
-            )
-        else:
-            prior = local_frame(sp_, [], state_schema)
+        prior = _epoch_state(sp_, state_root, state_schema, before=batch_id)
         cur = batch_df.select("user_id", "ts_ms", "event_id", "v_fp")
         alle = prior.unionByName(cur)
         wk = Window.partitionBy("user_id").orderBy(
@@ -1839,23 +1737,15 @@ def t30_stream_twap(spark, sf_dir):
             os.path.join(state_root, f"epoch={batch_id}")
         )
 
-    stream = (
-        spark.readStream.schema(state_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(feed, "cv-*"))
+    stream = sp.read_file_stream(
+        spark,
+        os.path.join(feed, "cv-*"),
+        state_schema,
+        max_files_per_trigger=1,
     )
-    q_ = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, fold, os.path.join(base, "ck"))
 
-    final_epoch = _epochs(state_root)[-1]
-    st = spark.read.parquet(
-        os.path.join(state_root, f"epoch={final_epoch}")
-    )
+    st = _epoch_state(spark, state_root, state_schema)
     sd0 = div_day(F.col("ts_ms"))
     s_end = (sd0 + 1) * day_lit
     close = st.select(
@@ -1903,15 +1793,11 @@ def t31_stream_chi2(spark, sf_dir):
     )
 
     stage = _stage_events(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t31_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t31_out")
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, EVENTS_SCHEMA, max_files_per_trigger=1
     )
 
     def land_partial(batch_df, batch_id: int) -> None:
@@ -1935,13 +1821,7 @@ def t31_stream_chi2(spark, sf_dir):
             os.path.join(sink, f"batch={batch_id}")
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_partial)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_partial, ck)
 
     merged = (
         spark.read.parquet(os.path.join(sink, "batch=*"))
@@ -1977,9 +1857,7 @@ def t33_stream_holt(spark, sf_dir):
         F.col("event_id").cast("bigint").alias("event_id"),
         F.col("value").cast("double").alias("v"),
     )
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t33_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t33")
     feed = _stage_ordered_day_feed(ev, base)
 
     state_root = os.path.join(base, "state")
@@ -1989,13 +1867,7 @@ def t33_stream_holt(spark, sf_dir):
 
     def fold(batch_df, batch_id: int) -> None:
         sp_ = batch_df.sparkSession
-        prev = [e for e in _epochs(state_root) if e < batch_id]
-        if prev:
-            prior = sp_.read.parquet(
-                os.path.join(state_root, f"epoch={prev[-1]}")
-            )
-        else:
-            prior = local_frame(sp_, [], state_schema)
+        prior = _epoch_state(sp_, state_root, state_schema, before=batch_id)
 
         def continue_fold(pdf: pd.DataFrame) -> pd.DataFrame:
             st = pdf[pdf["__src"] == 0]
@@ -2037,24 +1909,15 @@ def t33_stream_holt(spark, sf_dir):
             os.path.join(state_root, f"epoch={batch_id}")
         )
 
-    stream = (
-        spark.readStream
-        .schema("user_id BIGINT, ts_ms BIGINT, event_id BIGINT, v DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(feed, "cv-*"))
+    stream = sp.read_file_stream(
+        spark,
+        os.path.join(feed, "cv-*"),
+        "user_id BIGINT, ts_ms BIGINT, event_id BIGINT, v DOUBLE",
+        max_files_per_trigger=1,
     )
-    q_ = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, fold, os.path.join(base, "ck"))
 
-    final_epoch = _epochs(state_root)[-1]
-    st = spark.read.parquet(
-        os.path.join(state_root, f"epoch={final_epoch}")
-    )
+    st = _epoch_state(spark, state_root, state_schema)
     return st.select(
         "user_id",
         F.col("n").alias("n_events"),
@@ -2092,9 +1955,7 @@ def t34_stream_hw_seasonal(spark, sf_dir):
         F.col("event_id").cast("bigint").alias("event_id"),
         F.col("value").cast("double").alias("v"),
     )
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t34_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t34")
     feed = _stage_ordered_day_feed(ev, base)
 
     state_root = os.path.join(base, "state")
@@ -2106,13 +1967,7 @@ def t34_stream_hw_seasonal(spark, sf_dir):
 
     def fold(batch_df, batch_id: int) -> None:
         sp_ = batch_df.sparkSession
-        prev = [e for e in _epochs(state_root) if e < batch_id]
-        if prev:
-            prior = sp_.read.parquet(
-                os.path.join(state_root, f"epoch={prev[-1]}")
-            )
-        else:
-            prior = local_frame(sp_, [], state_schema)
+        prior = _epoch_state(sp_, state_root, state_schema, before=batch_id)
 
         def seq(a) -> float:
             t = 0.0
@@ -2167,24 +2022,15 @@ def t34_stream_hw_seasonal(spark, sf_dir):
             os.path.join(state_root, f"epoch={batch_id}")
         )
 
-    stream = (
-        spark.readStream
-        .schema("user_id BIGINT, ts_ms BIGINT, event_id BIGINT, v DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(feed, "cv-*"))
+    stream = sp.read_file_stream(
+        spark,
+        os.path.join(feed, "cv-*"),
+        "user_id BIGINT, ts_ms BIGINT, event_id BIGINT, v DOUBLE",
+        max_files_per_trigger=1,
     )
-    q_ = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, fold, os.path.join(base, "ck"))
 
-    final_epoch = _epochs(state_root)[-1]
-    st = spark.read.parquet(
-        os.path.join(state_root, f"epoch={final_epoch}")
-    )
+    st = _epoch_state(spark, state_root, state_schema)
     return st.filter(F.col("s").isNotNull()).select(
         "user_id",
         F.col("n").alias("n_events"),
@@ -2233,9 +2079,7 @@ def t35_stream_dedup_clusters(spark, sf_dir):
     docs = T(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "text"
     )
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t35_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t35")
     stage = os.path.join(base, "docs")
     docs.repartition(4).write.parquet(stage)
 
@@ -2312,34 +2156,17 @@ def t35_stream_dedup_clusters(spark, sf_dir):
 
         # 3. merge labels — affected components only
         # (operators/components.py:incremental_components_update)
-        prev = [e for e in _epochs(state_root) if e < batch_id]
-        if prev:
-            prior = sp_.read.parquet(
-                os.path.join(state_root, f"epoch={prev[-1]}")
-            )
-        else:
-            prior = local_frame(sp_, [], "id BIGINT, comp BIGINT")
+        prior = _epoch_state(sp_, state_root, _LABELS, before=batch_id)
         incremental_components_update(prior, new_pairs).write.mode(
             "overwrite"
         ).parquet(os.path.join(state_root, f"epoch={batch_id}"))
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
-    q_ = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, fold, os.path.join(base, "ck"))
 
-    final_epoch = _epochs(state_root)[-1]
-    return spark.read.parquet(
-        os.path.join(state_root, f"epoch={final_epoch}")
-    )
+    return _epoch_state(spark, state_root, _LABELS)
 
 
 @q("t32_stream_bm25", _ns.ORACLES["x4_bm25"])
@@ -2366,17 +2193,13 @@ def t32_stream_bm25(spark, sf_dir):
     docs = T(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "text"
     )
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t32_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t32")
     stage = os.path.join(base, "in")
     docs.repartition(4).write.parquet(stage)
     sink, ck = os.path.join(base, "index"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, "doc_id BIGINT, text STRING", max_files_per_trigger=1
     )
 
     def land_postings(batch_df, batch_id: int) -> None:
@@ -2384,13 +2207,7 @@ def t32_stream_bm25(spark, sf_dir):
             "overwrite"
         ).parquet(os.path.join(sink, f"batch={batch_id}"))
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_postings)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_postings, ck)
 
     postings = spark.read.parquet(os.path.join(sink, "batch=*"))
     q_terms = query_terms(spark, _ns._BM25_QUERIES)
@@ -2430,9 +2247,7 @@ def t29_stream_dataset_card(spark, sf_dir):
     oracle verbatim — stats accumulate at ingest, publishing the
     card is a tiny merge, the corpus is never re-scanned."""
     docs = T(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t29_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t29")
     stage = os.path.join(base, "in")
     docs.repartition(4).write.parquet(stage)
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
@@ -2451,18 +2266,10 @@ def t29_stream_dataset_card(spark, sf_dir):
             os.path.join(sink, f"batch={batch_id}")
         )
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
-    q_ = (
-        stream.writeStream.foreachBatch(land_partial)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_partial, ck)
 
     merged = (
         spark.read.parquet(os.path.join(sink, "batch=*"))
@@ -2514,20 +2321,14 @@ def t36_stream_bpe(spark, sf_dir):
     )
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t36_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t36")
     docs.repartition(4).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t36_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t36_out")
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
 
     def land_partial(batch_df, batch_id: int) -> None:
@@ -2540,13 +2341,7 @@ def t36_stream_bpe(spark, sf_dir):
             .parquet(os.path.join(sink, f"batch={batch_id}"))
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_partial)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_partial, ck)
 
     vocab = (
         spark.read.parquet(os.path.join(sink, "batch=*"))
@@ -2573,20 +2368,14 @@ def t39_stream_wordpiece(spark, sf_dir):
     )
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t39_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t39")
     docs.repartition(4).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t39_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t39_out")
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
 
     def land_partial(batch_df, batch_id: int) -> None:
@@ -2599,13 +2388,7 @@ def t39_stream_wordpiece(spark, sf_dir):
             .parquet(os.path.join(sink, f"batch={batch_id}"))
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_partial)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_partial, ck)
 
     vocab = (
         spark.read.parquet(os.path.join(sink, "batch=*"))
@@ -2655,20 +2438,14 @@ def t40_stream_wordpiece_infer(spark, sf_dir):
         .collect()
     ]
 
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t40_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t40")
     docs.repartition(4).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t40_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t40_out")
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
 
     def land_counts(batch_df, batch_id: int) -> None:
@@ -2687,13 +2464,7 @@ def t40_stream_wordpiece_infer(spark, sf_dir):
             .parquet(os.path.join(sink, f"batch={batch_id}"))
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_counts)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_counts, ck)
 
     return spark.read.parquet(os.path.join(sink, "batch=*")).select(
         "doc_id", "n_words", "n_wp_tokens"
@@ -2736,20 +2507,14 @@ def t41_stream_nb_gate(spark, sf_dir):
     )
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t41_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t41")
     docs.repartition(4).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t41_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t41_out")
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
 
     def land_partials(batch_df, batch_id: int) -> None:
@@ -2793,13 +2558,7 @@ def t41_stream_nb_gate(spark, sf_dir):
             .parquet(os.path.join(sink, f"docbuckets/batch={batch_id}"))
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_partials)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_partials, ck)
 
     counts = (
         spark.read.parquet(os.path.join(sink, "counts/batch=*"))
@@ -2868,21 +2627,15 @@ def t42_stream_gold_topk(spark, sf_dir):
     fires, stations = _gold_event_sides(spark, sf_dir)
     stations = stations.localCheckpoint(eager=True)  # static dim, pinned
 
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t42_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t42")
     fires.repartition(4).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t42_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t42_out")
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
 
     fire_schema = fires.schema
-    stream = (
-        spark.readStream.schema(fire_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, fire_schema, max_files_per_trigger=1
     )
 
     def land_topk(batch_df, batch_id: int) -> None:
@@ -2892,13 +2645,7 @@ def t42_stream_gold_topk(spark, sf_dir):
             .parquet(os.path.join(sink, f"batch={batch_id}"))
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_topk)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_topk, ck)
 
     return spark.read.parquet(os.path.join(sink, "batch=*"))
 
@@ -2938,20 +2685,14 @@ def t43_stream_rag_context(spark, sf_dir):
     queries_df = emb.filter(F.col("vec_id") < 5).select(
         "vec_id", "embedding"
     )
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t43_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t43")
     queries_df.repartition(2).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t43_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t43_out")
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(queries_df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, queries_df.schema, max_files_per_trigger=1
     )
 
     def serve_contexts(batch_df, batch_id: int) -> None:
@@ -2967,13 +2708,7 @@ def t43_stream_rag_context(spark, sf_dir):
             .parquet(os.path.join(sink, f"batch={batch_id}"))
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(serve_contexts)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, serve_contexts, ck)
 
     return spark.read.parquet(os.path.join(sink, "batch=*")).select(
         "q_id", "mmr_rank", "doc_id", "rel_fp", "n_tokens", "cum_tokens"
@@ -3017,20 +2752,14 @@ def t45_stream_decontaminate(spark, sf_dir):
     ).localCheckpoint(eager=True)  # the pinned per-benchmark artifact
     train = d.filter(u < 0.9)
 
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t45_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t45")
     train.repartition(4).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t45_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t45_out")
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(train.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, train.schema, max_files_per_trigger=1
     )
 
     def screen_batch(batch_df, batch_id: int) -> None:
@@ -3042,13 +2771,7 @@ def t45_stream_decontaminate(spark, sf_dir):
             .parquet(os.path.join(sink, f"batch={batch_id}"))
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(screen_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, screen_batch, ck)
 
     return spark.read.parquet(os.path.join(sink, "batch=*")).select(
         "doc_id", "n_overlap"
@@ -3089,20 +2812,14 @@ def t44_stream_nb_gate_sweep(spark, sf_dir):
     )
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t44_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t44")
     docs.repartition(4).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t44_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t44_out")
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
 
     def land_partials(batch_df, batch_id: int) -> None:
@@ -3161,13 +2878,7 @@ def t44_stream_nb_gate_sweep(spark, sf_dir):
             .parquet(os.path.join(sink, f"holabels/batch={batch_id}"))
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_partials)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_partials, ck)
 
     counts = (
         spark.read.parquet(os.path.join(sink, "counts/batch=*"))
@@ -3236,20 +2947,14 @@ def t37_stream_dsir(spark, sf_dir):
     )
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t37_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t37")
     docs.repartition(4).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t37_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t37_out")
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
 
     def land_partials(batch_df, batch_id: int) -> None:
@@ -3276,13 +2981,7 @@ def t37_stream_dsir(spark, sf_dir):
             .parquet(os.path.join(sink, f"docbuckets/batch={batch_id}"))
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_partials)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_partials, ck)
 
     counts = (
         spark.read.parquet(os.path.join(sink, "counts/batch=*"))
@@ -3331,20 +3030,14 @@ def t38_stream_line_dedup(spark, sf_dir):
     from eco_pulse_lakehouse_spark.operators.dedup import doc_chunks
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t38_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t38")
     docs.repartition(4).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t38_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t38_out")
     sink, ck = os.path.join(base, "partials"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
 
     def land_partials(batch_df, batch_id: int) -> None:
@@ -3363,13 +3056,7 @@ def t38_stream_line_dedup(spark, sf_dir):
             .parquet(os.path.join(sink, f"firsts/batch={batch_id}"))
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_partials)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_partials, ck)
 
     firsts = (
         spark.read.parquet(os.path.join(sink, "firsts/batch=*"))
@@ -3436,20 +3123,14 @@ def t46_stream_unimax(spark, sf_dir):
     docs = T(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "lang", "text"
     )
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t46_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t46")
     docs.repartition(4).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t46_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t46_out")
     sink, ck = os.path.join(base, "manifest"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
 
     def land_manifest(batch_df, batch_id: int) -> None:
@@ -3463,13 +3144,7 @@ def t46_stream_unimax(spark, sf_dir):
             .parquet(os.path.join(sink, f"batch={batch_id}"))
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_manifest)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_manifest, ck)
 
     manifest = spark.read.parquet(os.path.join(sink, "batch=*"))
     return unimax_select_from_tokens(
@@ -3525,20 +3200,14 @@ def t47_stream_search_serving(spark, sf_dir):
     req = local_frame(
         spark, _ns._BM25_QUERIES, "query_id long, query_text string"
     )
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t47_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t47")
     req.repartition(2).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t47_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t47_out")
     sink, ck = os.path.join(base, "results"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(req.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, req.schema, max_files_per_trigger=1
     )
 
     def serve_requests(batch_df, batch_id: int) -> None:
@@ -3556,13 +3225,7 @@ def t47_stream_search_serving(spark, sf_dir):
             .parquet(os.path.join(sink, f"batch={batch_id}"))
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(serve_requests)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, serve_requests, ck)
 
     return spark.read.parquet(os.path.join(sink, "batch=*")).select(
         "query_id", "doc_id", "rrf_score", "rk", "n_tokens", "cum_tokens"
@@ -3595,20 +3258,14 @@ def t48_stream_winnowing(spark, sf_dir):
     docs = T(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "text"
     )
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t48_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t48")
     docs.repartition(4).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t48_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t48_out")
     sink, ck = os.path.join(base, "index"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
 
     def land_fingerprints(batch_df, batch_id: int) -> None:
@@ -3621,13 +3278,7 @@ def t48_stream_winnowing(spark, sf_dir):
             .parquet(os.path.join(sink, f"batch={batch_id}"))
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_fingerprints)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_fingerprints, ck)
 
     fp = spark.read.parquet(os.path.join(sink, "batch=*"))
     a = fp.select(F.col("doc_id").alias("id_a"), "fp")
@@ -3692,20 +3343,14 @@ def t49_stream_hybrid_serving(spark, sf_dir):
     req = local_frame(
         spark, _ns._BM25_QUERIES, "query_id long, query_text string"
     )
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t49_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t49")
     req.repartition(2).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t49_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t49_out")
     sink, ck = os.path.join(base, "results"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(req.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, req.schema, max_files_per_trigger=1
     )
 
     def serve_requests(batch_df, batch_id: int) -> None:
@@ -3723,13 +3368,7 @@ def t49_stream_hybrid_serving(spark, sf_dir):
             .parquet(os.path.join(sink, f"batch={batch_id}"))
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(serve_requests)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, serve_requests, ck)
 
     return spark.read.parquet(os.path.join(sink, "batch=*")).select(
         "query_id", "doc_id", "rrf_score", "rk", "n_tokens", "cum_tokens"
@@ -3767,9 +3406,7 @@ def t50_stream_hybrid_index(spark, sf_dir):
         F.col("doc_id").cast("bigint").alias("doc_id"), "text"
     )
     e = T(spark, sf_dir, "embeddings")
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t50_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t50")
 
     # --- ingest pipeline 1: the keyword index ---
     d_stage = os.path.join(base, "docs_in")
@@ -3781,16 +3418,10 @@ def t50_stream_hybrid_index(spark, sf_dir):
             "overwrite"
         ).parquet(os.path.join(d_sink, f"batch={batch_id}"))
 
-    q1 = (
-        spark.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d_stage)
-        .writeStream.foreachBatch(land_postings)
-        .option("checkpointLocation", os.path.join(base, "ck1"))
-        .trigger(availableNow=True)
-        .start()
+    stream = sp.read_file_stream(
+        spark, d_stage, "doc_id BIGINT, text STRING", max_files_per_trigger=1
     )
-    q1.awaitTermination()
+    sp.drain(stream, land_postings, os.path.join(base, "ck1"))
 
     # --- ingest pipeline 2: the int8 vector store ---
     e_stage = os.path.join(base, "vecs_in")
@@ -3802,16 +3433,10 @@ def t50_stream_hybrid_index(spark, sf_dir):
             "overwrite"
         ).parquet(os.path.join(e_sink, f"batch={batch_id}"))
 
-    q2 = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(e_stage)
-        .writeStream.foreachBatch(land_store)
-        .option("checkpointLocation", os.path.join(base, "ck2"))
-        .trigger(availableNow=True)
-        .start()
+    stream = sp.read_file_stream(
+        spark, e_stage, e.schema, max_files_per_trigger=1
     )
-    q2.awaitTermination()
+    sp.drain(stream, land_store, os.path.join(base, "ck2"))
 
     postings = spark.read.parquet(os.path.join(d_sink, "batch=*"))
     store = spark.read.parquet(os.path.join(e_sink, "batch=*"))
@@ -3850,20 +3475,14 @@ def t51_stream_winnowing_clusters(spark, sf_dir):
     docs = d.select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "text"
     )
-    stage = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t51_{uuid.uuid4().hex}"
-    )
+    stage = _scratch("t51")
     docs.repartition(4).write.mode("overwrite").parquet(stage)
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t51_out_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t51_out")
     sink, ck = os.path.join(base, "index"), os.path.join(base, "ck")
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
 
     def land_fingerprints(batch_df, batch_id: int) -> None:
@@ -3876,13 +3495,7 @@ def t51_stream_winnowing_clusters(spark, sf_dir):
             .parquet(os.path.join(sink, f"batch={batch_id}"))
         )
 
-    q_ = (
-        stream.writeStream.foreachBatch(land_fingerprints)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, land_fingerprints, ck)
 
     fp = spark.read.parquet(os.path.join(sink, "batch=*"))
     a = fp.select(F.col("doc_id").alias("id_a"), "fp")
@@ -3929,9 +3542,7 @@ def t52_stream_hybrid_loop(spark, sf_dir):
         F.col("doc_id").cast("bigint").alias("doc_id"), "text"
     )
     e = T(spark, sf_dir, "embeddings")
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t52_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t52")
 
     # --- maintenance stream 1: the keyword index ---
     d_stage = os.path.join(base, "docs_in")
@@ -3943,16 +3554,10 @@ def t52_stream_hybrid_loop(spark, sf_dir):
             "overwrite"
         ).parquet(os.path.join(d_sink, f"batch={batch_id}"))
 
-    q1 = (
-        spark.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d_stage)
-        .writeStream.foreachBatch(land_postings)
-        .option("checkpointLocation", os.path.join(base, "ck1"))
-        .trigger(availableNow=True)
-        .start()
+    stream = sp.read_file_stream(
+        spark, d_stage, "doc_id BIGINT, text STRING", max_files_per_trigger=1
     )
-    q1.awaitTermination()
+    sp.drain(stream, land_postings, os.path.join(base, "ck1"))
 
     # --- maintenance stream 2: the int8 vector store ---
     e_stage = os.path.join(base, "vecs_in")
@@ -3964,16 +3569,10 @@ def t52_stream_hybrid_loop(spark, sf_dir):
             "overwrite"
         ).parquet(os.path.join(e_sink, f"batch={batch_id}"))
 
-    q2 = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(e_stage)
-        .writeStream.foreachBatch(land_store)
-        .option("checkpointLocation", os.path.join(base, "ck2"))
-        .trigger(availableNow=True)
-        .start()
+    stream = sp.read_file_stream(
+        spark, e_stage, e.schema, max_files_per_trigger=1
     )
-    q2.awaitTermination()
+    sp.drain(stream, land_store, os.path.join(base, "ck2"))
 
     # --- serving stream over the two MERGED maintained artifacts ---
     # pinned for the request loop (the t49 discipline: many request
@@ -4015,16 +3614,10 @@ def t52_stream_hybrid_loop(spark, sf_dir):
             .parquet(os.path.join(r_sink, f"batch={batch_id}"))
         )
 
-    q3 = (
-        spark.readStream.schema(req.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(r_stage)
-        .writeStream.foreachBatch(serve_requests)
-        .option("checkpointLocation", os.path.join(base, "ck3"))
-        .trigger(availableNow=True)
-        .start()
+    stream = sp.read_file_stream(
+        spark, r_stage, req.schema, max_files_per_trigger=1
     )
-    q3.awaitTermination()
+    sp.drain(stream, serve_requests, os.path.join(base, "ck3"))
 
     return spark.read.parquet(os.path.join(r_sink, "batch=*")).select(
         "query_id", "doc_id", "rrf_score", "rk", "n_tokens", "cum_tokens"
@@ -4071,9 +3664,7 @@ def t53_stream_winnowing_incremental(spark, sf_dir):
     docs = d.select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "text"
     )
-    base = os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_t53_{uuid.uuid4().hex}"
-    )
+    base = _scratch("t53")
     stage = os.path.join(base, "docs")
     docs.repartition(4).write.parquet(stage)
 
@@ -4116,34 +3707,17 @@ def t53_stream_winnowing_incremental(spark, sf_dir):
             .select("id_a", "id_b")
         )
 
-        prev = [e for e in _epochs(state_root) if e < batch_id]
-        if prev:
-            prior = sp_.read.parquet(
-                os.path.join(state_root, f"epoch={prev[-1]}")
-            )
-        else:
-            prior = local_frame(sp_, [], "id BIGINT, comp BIGINT")
+        prior = _epoch_state(sp_, state_root, _LABELS, before=batch_id)
         incremental_components_update(prior, new_pairs).write.mode(
             "overwrite"
         ).parquet(os.path.join(state_root, f"epoch={batch_id}"))
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    stream = sp.read_file_stream(
+        spark, stage, docs.schema, max_files_per_trigger=1
     )
-    q_ = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
+    sp.drain(stream, fold, os.path.join(base, "ck"))
 
-    final_epoch = _epochs(state_root)[-1]
-    labels = spark.read.parquet(
-        os.path.join(state_root, f"epoch={final_epoch}")
-    )
+    labels = _epoch_state(spark, state_root, _LABELS)
     return canonical_per_cluster(
         d, None, F.col("lang") == "en", labels=labels
     )

@@ -97,25 +97,3 @@ def risk_rank(risk: Column) -> Column:
     for i, lvl in reversed(list(enumerate(RISK_LEVELS))):
         expr = F.when(risk == lvl, i).otherwise(expr)
     return expr
-
-
-# --- keys / time ----------------------------------------------------------
-
-
-def synthetic_point_id(lat: Column, lon: Column) -> Column:
-    """``fire_id = str(lat) + '_' + str(lon)`` (app.py:61) as concat_ws."""
-    return F.concat_ws("_", lat.cast("string"), lon.cast("string"))
-
-
-def epoch_to_timestamp(epoch_seconds: Column) -> Column:
-    """Canonical event time from the reference's epoch-seconds doubles.
-
-    The reference keeps event time as a raw double and orders on it
-    (nasa_producer.py:199, gold_batch_job.py:32); the engine's
-    canonical form is a real TimestampType (session TZ pinned UTC).
-    """
-    return F.timestamp_seconds(epoch_seconds)
-
-
-def timestamp_to_epoch(ts: Column) -> Column:
-    return F.unix_timestamp(ts).cast("double")

@@ -479,37 +479,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def incremental_dedup(
-    base: DataFrame,
-    batch: DataFrame,
-    content_cols: list[str],
-    id_col: str,
-) -> DataFrame:
-    """X1 — dedup a NEW batch against an already-curated base corpus
-    (the steady-state ingestion shape: the base is deduped once, and
-    every arriving batch must drop (a) rows duplicating the base and
-    (b) intra-batch duplicates, keeping the lowest-id new row).
-
-    Both checks key on the 32-byte sha256 content fingerprint, never
-    the payload: the intra-batch pick is one window over the batch
-    (small), and the vs-base check is a LEFT ANTI join on the hash —
-    at 100 TB the base side is a bucketed/partitioned hash column
-    (or a Bloom prefilter, operators/joins.py:bloom_prefilter), so
-    the batch probes it without re-scanning base payloads. Base
-    rows are never rewritten — cost is O(batch), not O(corpus).
-    """
-    key = content_key([F.col(c) for c in content_cols])
-    batch_keyed = batch.withColumn("__ck", key)
-    w = Window.partitionBy("__ck").orderBy(F.col(id_col).asc())
-    batch_unique = (
-        batch_keyed.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    base_keys = base.select(key.alias("__ck")).distinct()
-    return batch_unique.join(base_keys, "__ck", "left_anti").drop("__ck")
-
-
 def _neighbor_candidates(
     docs: DataFrame,
     id_col: str,

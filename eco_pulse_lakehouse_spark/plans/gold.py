@@ -129,8 +129,8 @@ def run_gold_cycle(
     Durability: at-least-once with idempotent-by-key replay. A crash
     mid-commit can lose *touched* partitions of the current cycle
     (replay the batch to repair), never the rest of the table; a
-    transactional Delta MERGE (sources/delta_io.py) is the
-    exactly-once upgrade when delta-spark is on the classpath.
+    transactional Delta MERGE is the exactly-once upgrade when
+    delta-spark is on the classpath.
     """
     import os
 

@@ -1,4 +1,5 @@
-"""Batch source/sink helpers — S4/S5/S7/S8 + partitioned layout.
+"""Batch source/sink helpers — ORC, partitioned and bucketed layout,
+small-file compaction.
 
 The reference claims time/spatial partitioning (README.MD:73) but
 writes unpartitioned (fire_risk_processor.py:76-85 — SURVEY.md §4.3).
@@ -15,24 +16,12 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 
-def read_csv(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """S7 — CSV with header and explicit schema (never inferSchema in
-    production: one extra full scan and nondeterministic typing)."""
-    return spark.read.option("header", True).schema(schema).csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """S8 — JSON-lines with explicit schema (the HTTP-payload ingest
-    shape, weather_producer.py:94-114)."""
-    return spark.read.schema(schema).json(path)
-
-
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     """S12 — ORC source (native in Spark, columnar like parquet:
     predicate pushdown + column pruning apply identically). Avro is
     NOT available here: spark-avro is an external module and this
     image has no jar and disallows installs — gate any avro path on
-    a format probe, as delta_io.py does for Delta."""
+    a format probe."""
     return spark.read.orc(path)
 
 

@@ -8,9 +8,12 @@ replays re-append); this module closes T4/T5 with
 ``withWatermark + dropDuplicates`` so replayed events are dropped
 and silver is effectively exactly-once.
 
-Tests drive these with file sources + ``availableNow`` triggers (no
-Kafka needed); the Kafka wiring lives in sources/kafka_io.py and is
-the same DataFrame in, DataFrame out.
+Tests and the streaming corpus drive these with file sources and
+``availableNow`` triggers (no Kafka needed): a Kafka source is the
+same DataFrame in, DataFrame out. This module owns the drain policy
+for those hermetic streams — ``drain`` (foreachBatch),
+``run_to_parquet`` and ``run_to_memory`` are the only places that
+set a trigger and wait for a query.
 
 Scale notes: stateful dedup keeps one state row per key inside the
 watermark horizon — key the dedup on a compact natural key and keep
@@ -24,15 +27,18 @@ import contextlib
 import os
 import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.types import StructType
 
 
 def read_file_stream(
     spark: SparkSession,
     path: str,
-    schema: str,
+    schema: str | StructType,
     fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
@@ -132,14 +138,11 @@ def run_to_memory(
     return the result table (hermetic test harness; the guide's
     processAllAvailable pattern)."""
     with _scoped_state_partitions(df.sparkSession, state_partitions):
-        q = (
+        _run_available(
             df.writeStream.format("memory")
             .queryName(query_name)
             .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
     return df.sparkSession.table(query_name)
 
 
@@ -151,8 +154,7 @@ def run_to_parquet(
     state_partitions: int | None = None,
 ) -> None:
     """S3 analogue — checkpointed append file sink (Delta in the
-    reference, parquet in this image; sources/delta_io.py upgrades
-    when delta-spark is importable). Re-running with the same
+    reference, parquet here). Re-running with the same
     checkpoint is a no-op for already-committed source files —
     exactly-once to the sink (T2). ``state_partitions`` sizes the
     stateful-operator partitioning (see _scoped_state_partitions)."""
@@ -160,15 +162,46 @@ def run_to_parquet(
         tempfile.gettempdir(), f"eco_pulse_ckpt_{uuid.uuid4().hex}"
     )
     with _scoped_state_partitions(df.sparkSession, state_partitions):
-        q = (
+        _run_available(
             df.writeStream.format("parquet")
             .option("path", path)
             .option("checkpointLocation", checkpoint)
             .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+
+
+def drain(
+    stream: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint: str,
+) -> StreamingQuery:
+    """Run ``fn(batch_df, batch_id)`` on every micro-batch of
+    ``stream`` until the source has nothing left, and return the
+    finished query.
+
+    The drain policy of every hermetic foreachBatch loop: an
+    ``availableNow`` trigger processes everything the source holds
+    at start, honouring ``maxFilesPerTrigger`` — so a file source
+    read with ``max_files_per_trigger=1`` delivers one committed
+    file per batch, in commit order, with batch ids 0, 1, ... The
+    checkpoint records committed batches: draining again with the
+    same checkpoint and no new files runs no batch, and a batch that
+    failed mid-way is replayed under the SAME id — which is why the
+    batch bodies key their outputs on it (``batch=<id>`` /
+    ``epoch=<id>`` overwrite)."""
+    return _run_available(
+        stream.writeStream.foreachBatch(fn).option(
+            "checkpointLocation", checkpoint
+        )
+    )
+
+
+def _run_available(writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` under an ``availableNow`` trigger and block
+    until the query has processed all available input."""
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
 
 
 def chained_window_rollup(

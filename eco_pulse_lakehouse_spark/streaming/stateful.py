@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from eco_pulse_lakehouse_spark.streaming.pipeline import drain
+
 
 def running_totals_stream(
     events: DataFrame, ttl_ms: int | None = None
@@ -190,6 +192,9 @@ def foreach_batch_upsert(
       a staging directory + rename swap, so a crash never leaves the
       target deleted — worst case the previous table survives at
       ``<target>.__old`` and the swap is re-run on replay.
+
+    Drains the stream (streaming/pipeline.py:drain) and returns the
+    finished query.
     """
     from eco_pulse_lakehouse_spark.operators.merge import upsert
 
@@ -239,12 +244,7 @@ def foreach_batch_upsert(
         os.rename(staging, target_path)
         shutil.rmtree(backup, ignore_errors=True)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream, sink, checkpoint)
 
 
 def foreach_batch_fanout(
@@ -271,7 +271,9 @@ def foreach_batch_fanout(
     The metrics sum is 1e-3 fixed-point BIGINT — integer partial
     aggregation, reproducible under any partial-agg order (a float
     sum would drift in the last ulp between replays, making
-    "idempotent replay" quietly false for the metrics sink)."""
+    "idempotent replay" quietly false for the metrics sink).
+    Drains the stream (streaming/pipeline.py:drain) and returns the
+    finished query."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         b = batch_df.persist()
@@ -292,12 +294,7 @@ def foreach_batch_fanout(
         )
         b.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream, sink, checkpoint)
 
 
 def running_totals_tws(events: DataFrame) -> DataFrame:
@@ -316,7 +313,7 @@ def running_totals_tws(events: DataFrame) -> DataFrame:
     mode); the count is strictly monotone per key, so the FINAL
     state row per key is the max-n row.
 
-    ENVIRONMENT-GATED (like sources/delta_io.py): the v2 state
+    ENVIRONMENT-GATED: the v2 state
     protocol runs a Python state server speaking protobuf to the
     JVM, and this image has no ``google.protobuf``
     (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE: cannot import
