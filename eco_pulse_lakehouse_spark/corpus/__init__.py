@@ -44,7 +44,12 @@ CHANGED: frozenset[str] = frozenset(
         "flagship_tokenizer_pipeline",
         "o4_distributed_global_rank",
         "q11_ks_drift",
+        "s12_orc_roundtrip",
+        "s13_schema_evolution",
+        "s15_compaction",
         "s20_versioned_history",
+        "s5_write_roundtrip",
+        "s7_csv_roundtrip",
         "t10_stream_stream_join",
         "t11_stream_stream_left_join",
         "t12_python_stream_source",
@@ -98,6 +103,7 @@ CHANGED: frozenset[str] = frozenset(
         "x2_snm_multipass",
         "x2_sorted_neighborhood",
         "x2_winnowing_bounded",
+        "x3_ivf_persisted",
         "x4_bm25",
         "x4_bpe_merges",
         "x4_bpe_segment",

@@ -1,10 +1,35 @@
-"""Tiny registration helper shared by corpus modules."""
+"""Tiny registration and scratch-path helpers shared by corpus modules."""
 
 from __future__ import annotations
+
+import atexit
+import functools
+import os
+import shutil
+import tempfile
+import uuid
 
 from pyspark.sql import functions as F
 
 from eco_pulse_lakehouse_spark.catalog import load_table as T  # noqa: F401
+
+
+def scratch(tag: str, key: str | None = None) -> str:
+    """A temp path that does not exist yet: ``<tag>_<uuid hex>`` under
+    this process's scratch root, which is made on first use and
+    removed at interpreter exit. ``key`` names a path kept across
+    processes instead, ``<tempdir>/eco_pulse_<tag>_<key>``: the
+    per-scale-factor tables that are built once and then reused."""
+    if key is not None:
+        return os.path.join(tempfile.gettempdir(), f"eco_pulse_{tag}_{key}")
+    return os.path.join(_scratch_root(), f"{tag}_{uuid.uuid4().hex}")
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="eco_pulse_run_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 def make_registry():

@@ -9,12 +9,16 @@ from __future__ import annotations
 
 import os
 import tempfile
-import uuid
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from eco_pulse_lakehouse_spark.corpus._registry import T, make_registry, o_dec_sum
+from eco_pulse_lakehouse_spark.corpus._registry import (
+    T,
+    make_registry,
+    o_dec_sum,
+    scratch,
+)
 from eco_pulse_lakehouse_spark.operators import joins as oj
 from eco_pulse_lakehouse_spark.operators import merge as om
 from eco_pulse_lakehouse_spark.operators import pandas_ops as op
@@ -1409,15 +1413,9 @@ def s15_compaction(spark, sf_dir):
     is unchanged. At 100 TB the scan's task count and listing
     pressure follow the FILE count, so this is the maintenance op
     that keeps read amplification flat."""
-    import os
-    import tempfile
-    import uuid
-
     from eco_pulse_lakehouse_spark.sources.batch_io import compact_files
 
-    path = os.path.join(
-        tempfile.gettempdir(), f"s15_compact_{uuid.uuid4().hex[:8]}"
-    )
+    path = scratch("s15_compact")
     T(spark, sf_dir, "events").repartition(64).write.parquet(path)
     before, after = compact_files(spark, path, target_files=4)
     assert before >= 64 and after == 4

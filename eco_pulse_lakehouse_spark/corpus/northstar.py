@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from eco_pulse_lakehouse_spark.corpus._registry import T, make_registry
+from eco_pulse_lakehouse_spark.corpus._registry import T, make_registry, scratch
 from eco_pulse_lakehouse_spark.functions import text as xt
 from eco_pulse_lakehouse_spark.operators import dedup as xd
 from eco_pulse_lakehouse_spark.operators import multimodal as xm
@@ -956,8 +956,6 @@ def x3_ivf_persisted(spark, sf_dir):
     ivf_topk replay) — the persisted lifecycle changes only where
     the lists live, not the results."""
     import os
-    import tempfile
-    import uuid
 
     from eco_pulse_lakehouse_spark.operators.similarity import (
         build_ivf_index,
@@ -967,9 +965,7 @@ def x3_ivf_persisted(spark, sf_dir):
     e = T(spark, sf_dir, "embeddings")
     path = _IVF_INDEX_CACHE.get(sf_dir)
     if not (path and os.path.exists(f"{path}/lists")):
-        path = os.path.join(
-            tempfile.gettempdir(), f"eco_pulse_ivf_{uuid.uuid4().hex}"
-        )
+        path = scratch("ivf")
         build_ivf_index(e, path, n_centroids=16)
         _IVF_INDEX_CACHE[sf_dir] = path
     queries = e.filter(F.col("vec_id") < 10).select(

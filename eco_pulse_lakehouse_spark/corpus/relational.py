@@ -8,10 +8,6 @@ with SURVEY.md §2.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import functions as F
 
 from eco_pulse_lakehouse_spark.corpus._registry import (
@@ -21,13 +17,12 @@ from eco_pulse_lakehouse_spark.corpus._registry import (
     make_registry,
     o_dec_avg,
     o_dec_sum,
+    scratch,
 )
 from eco_pulse_lakehouse_spark.operators import joins as oj
 from eco_pulse_lakehouse_spark.operators import windows as ow
 
 QUERIES, ORACLES, q = make_registry()
-
-_TMP = os.path.join(tempfile.gettempdir(), "eco_pulse_corpus")
 
 
 # =====================================================================
@@ -160,7 +155,7 @@ def s4_scan_pushdown(spark, sf_dir):
 def s5_write_roundtrip(spark, sf_dir):
     """S5 — batch sink overwrite + readback (gold_batch_job.py:83-87
     maps Delta overwrite → parquet overwrite in this image)."""
-    path = os.path.join(_TMP, f"s5_roundtrip_{uuid.uuid4().hex[:8]}")
+    path = scratch("s5_roundtrip")
     li = T(spark, sf_dir, "lineitem").filter(F.col("l_discount") > 0.05)
     li.write.mode("overwrite").parquet(path)
     return (
@@ -174,7 +169,7 @@ def s5_write_roundtrip(spark, sf_dir):
 def s7_csv_roundtrip(spark, sf_dir):
     """S7 — CSV source with header + explicit schema (nasa_producer.py
     FIRMS CSV ingest shape, no inferSchema)."""
-    path = os.path.join(_TMP, f"s7_csv_{uuid.uuid4().hex[:8]}")
+    path = scratch("s7_csv")
     T(spark, sf_dir, "nation").write.mode("overwrite").option("header", True).csv(path)
     return spark.read.option("header", True).schema(
         "n_nationkey INT, n_name STRING, n_regionkey INT"
@@ -197,7 +192,7 @@ def s12_orc_roundtrip(spark, sf_dir):
     oracle-exact."""
     from eco_pulse_lakehouse_spark.sources.batch_io import read_orc, write_orc
 
-    path = os.path.join(_TMP, f"s12_orc_{uuid.uuid4().hex[:8]}")
+    path = scratch("s12_orc")
     write_orc(T(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O"), path)
     return (
         read_orc(spark, path)
@@ -229,7 +224,7 @@ def s13_schema_evolution(spark, sf_dir):
     expressed at the parquet layer). At 100 TB merging happens on
     file FOOTERS only (no data scan), so evolution costs planning
     time, not a rewrite."""
-    path = os.path.join(_TMP, f"s13_evo_{uuid.uuid4().hex[:8]}")
+    path = scratch("s13_evo")
     n = T(spark, sf_dir, "nation")
     n.select("n_nationkey", "n_name").write.mode("overwrite").parquet(path)
     n.select(

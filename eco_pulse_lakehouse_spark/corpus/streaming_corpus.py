@@ -6,26 +6,30 @@ semantics), drains the stream to completion and returns the
 materialized result as a batch DataFrame — so the driver can
 oracle-check STREAMING semantics against plain SQL.
 
-Three helpers carry the loop machinery, so each entry keeps only its
-batch body, its sink layout and its serve-side read:
+Three seams carry the loop machinery, so each entry keeps only its
+batch body and its serve-side read:
 
 * ``sp.drain(stream, fn, checkpoint)`` (streaming/pipeline.py) runs
   a foreachBatch body under the one drain policy — sources read with
   ``max_files_per_trigger=1`` deliver one committed file per batch,
   in commit order — and ``sp.run_to_parquet`` / ``sp.run_to_memory``
   do the same for plain sinks;
-* ``_scratch(tag)`` names a fresh uuid stage/sink/checkpoint path, so
-  replays stay honest (checkpoint reuse is pinned separately in
-  tests/test_streaming.py);
-* ``_epoch_state(spark, root, schema, before)`` reads the carried
-  state of an epoch-keyed fold: the latest ``epoch=<n>`` before the
-  current batch, so a replayed batch never reads its own partial.
+* the epoch sink of streaming/pipeline.py: a body lands its per-batch
+  partial with ``sp.write_epoch(df, root, batch_id)`` (overwrite of
+  ``root/epoch=<id>``), the serve side reads the union back with
+  ``sp.read_epochs(spark, root)``, and a carry-state fold reads its
+  predecessor with ``sp.read_last_epoch(spark, root, schema,
+  before=batch_id)``, so a replayed batch never reads its own
+  partial. Reads use the schema in the partials' parquet footers;
+* ``_scratch(tag)`` (corpus/_registry.py:scratch) names a fresh uuid
+  stage/sink/checkpoint path under the process's scratch root, which
+  is removed at exit, so replays stay honest (checkpoint reuse is
+  pinned separately in tests/test_streaming.py).
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import Window
@@ -35,6 +39,7 @@ from eco_pulse_lakehouse_spark.corpus import extended as _ext
 from eco_pulse_lakehouse_spark.corpus import northstar as _ns
 from eco_pulse_lakehouse_spark.corpus import relational as _rel
 from eco_pulse_lakehouse_spark.corpus._registry import T, make_registry
+from eco_pulse_lakehouse_spark.corpus._registry import scratch as _scratch
 from eco_pulse_lakehouse_spark.session import local_frame
 from eco_pulse_lakehouse_spark.streaming import pipeline as sp
 
@@ -52,45 +57,6 @@ EVENTS_SCHEMA = (
 _STAGE_CACHE: dict[tuple, str] = {}
 
 _DAY_MS = 86_400_000
-
-
-def _scratch(tag: str, key: str | None = None) -> str:
-    """A temp path ``eco_pulse_<tag>_<uuid hex>`` that does not exist
-    yet. ``key`` replaces the uuid for the per-scale-factor versioned
-    tables that are built once and then reused."""
-    name = f"eco_pulse_{tag}_{key or uuid.uuid4().hex}"
-    return os.path.join(tempfile.gettempdir(), name)
-
-
-def _epochs(root: str) -> list[int]:
-    """Sorted numeric epoch ids under ``root/epoch=<digits>``.
-
-    ADVICE r06: the listing must IGNORE stray non-numeric entries
-    (a Spark temporary or _committed dir landing under the state
-    root) instead of raising ValueError inside foreachBatch — benign
-    today because the roots are uuid-fresh temp dirs written only by
-    these jobs, but cheap to make robust."""
-    import glob as _g
-
-    out = []
-    for p in _g.glob(os.path.join(root, "epoch=*")):
-        suffix = os.path.basename(p).split("=", 1)[1]
-        if suffix.isdigit():
-            out.append(int(suffix))
-    return sorted(out)
-
-
-def _epoch_state(spark, root: str, schema, before: int | None = None):
-    """The carried state of an epoch-keyed fold: the frame under the
-    latest ``root/epoch=<n>`` with ``n < before`` (the last epoch
-    when ``before`` is None), or an empty ``schema`` frame when there
-    is none. A batch passes its own id as ``before``, so a replayed
-    batch reads the same predecessor state as its first attempt and
-    never its own partial epoch."""
-    prev = [e for e in _epochs(root) if before is None or e < before]
-    if not prev:
-        return local_frame(spark, [], schema)
-    return spark.read.parquet(os.path.join(root, f"epoch={prev[-1]}"))
 
 
 # state schema of the connected-component label folds (t35, t53)
@@ -209,7 +175,7 @@ def t5_stream_dedup(spark, sf_dir):
     # sf0.1), NOT the batch shuffle default: 32 near-empty state
     # stores spend more per batch committing deltas than deduplicating
     # (2.5 s → 1.2 s drain, the round-2 t5 regression root cause)
-    sp.run_to_parquet(silver, sink, state_partitions=8)
+    sp.run_to_parquet(silver, sink, _scratch("ck"), state_partitions=8)
     return spark.read.parquet(sink).select("event_id", "user_id", "value")
 
 
@@ -261,7 +227,7 @@ def t10_stream_stream_join(spark, sf_dir):
         & (F.col("c_ts") <= F.col("p_ts")),
     ).select("purchase_id", "click_id", "user_id", "purchase_value")
     sink = _scratch("sink")
-    sp.run_to_parquet(joined, sink)
+    sp.run_to_parquet(joined, sink, _scratch("ck"))
     return spark.read.parquet(sink)
 
 
@@ -356,7 +322,7 @@ def t11_stream_stream_left_join(spark, sf_dir):
         "leftOuter",
     ).select("purchase_id", "click_id", "user_id", "purchase_value")
     sink = _scratch("sink")
-    sp.run_to_parquet(joined, sink)
+    sp.run_to_parquet(joined, sink, _scratch("ck"))
     return spark.read.parquet(sink).filter(F.col("user_id") >= 0)
 
 
@@ -412,7 +378,7 @@ def t8_stream_static_join(spark, sf_dir):
         .select("event_id", "user_id", "value", "c_name", "c_mktsegment")
     )
     sink = _scratch("sink")
-    sp.run_to_parquet(joined, sink)
+    sp.run_to_parquet(joined, sink, _scratch("ck"))
     return spark.read.parquet(sink)
 
 
@@ -436,7 +402,7 @@ def t3_stream_append_silver(spark, sf_dir):
         .select("event_id", "user_id", "value", F.col("data.k").alias("k"))
     )
     sink = _scratch("sink")
-    sp.run_to_parquet(silver, sink)
+    sp.run_to_parquet(silver, sink, _scratch("ck"))
     return spark.read.parquet(sink)
 
 
@@ -638,7 +604,7 @@ def t16_stream_fanout(spark, sf_dir):
         f"{base}/metrics",
         checkpoint=f"{base}/ckpt",
     )
-    return spark.read.parquet(f"{base}/detail").select(
+    return sp.read_epochs(spark, f"{base}/detail").select(
         "event_id", "user_id", F.round("value", 6).alias("value")
     )
 
@@ -703,14 +669,14 @@ def t17_stream_countmin(spark, sf_dir):
 
     def land_partial(batch_df, batch_id: int) -> None:
         tok = batch_df.select(F.explode(tokens(F.col("text"))).alias("w"))
-        sk.cms_build(tok, "w", depth=4, width=64).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(sink, f"batch={batch_id}"))
+        sp.write_epoch(
+            sk.cms_build(tok, "w", depth=4, width=64), sink, batch_id
+        )
 
     sp.drain(stream, land_partial, ck)
 
     sketch = (
-        spark.read.parquet(os.path.join(sink, "batch=*"))
+        sp.read_epochs(spark, sink)
         .groupBy("d", "bucket")
         .agg(F.sum("c").alias("c"))
     )
@@ -754,15 +720,14 @@ def t18_stream_lsh_index(spark, sf_dir):
     )
 
     def land_bands(batch_df, batch_id: int) -> None:
-        minhash_bands(
+        bands = minhash_bands(
             batch_df, "doc_id", "text", token_hash=poly_token_hash
-        ).write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch={batch_id}")
         )
+        sp.write_epoch(bands, sink, batch_id)
 
     sp.drain(stream, land_bands, ck)
 
-    idx = spark.read.parquet(os.path.join(sink, "batch=*"))
+    idx = sp.read_epochs(spark, sink)
     a = idx.select(F.col("doc_id").alias("id_a"), "band", "bh")
     b = idx.select(F.col("doc_id").alias("id_b"), "band", "bh")
     return (
@@ -901,13 +866,13 @@ def t19_stream_ann_ingest(spark, sf_dir):
 
     def land_encoded(batch_df, batch_id: int) -> None:
         bq = quantize_embeddings(batch_df, "embedding", "q_vec", n_levels=127)
-        ivfpq_encode(bq, coarse, rcb, "vec_id", "q_vec").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(sink, f"batch={batch_id}"))
+        sp.write_epoch(
+            ivfpq_encode(bq, coarse, rcb, "vec_id", "q_vec"), sink, batch_id
+        )
 
     sp.drain(stream, land_encoded, ck)
 
-    enc = spark.read.parquet(os.path.join(sink, "batch=*"))
+    enc = sp.read_epochs(spark, sink)
     qs_ = qz.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), "q_vec"
     )
@@ -1223,14 +1188,12 @@ def t23_stream_psi(spark, sf_dir):
                 ).alias("__k2"),
             )
         )
-        bins.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch={batch_id}")
-        )
+        sp.write_epoch(bins, sink, batch_id)
 
     sp.drain(stream, land_partial, ck)
 
     merged = (
-        spark.read.parquet(os.path.join(sink, "batch=*"))
+        sp.read_epochs(spark, sink)
         .groupBy("__bucket")
         .agg(
             F.sum("__k1").alias("__k1"),
@@ -1300,14 +1263,12 @@ def t24_stream_ks(spark, sf_dir):
                 ).alias("__k2"),
             )
         )
-        v.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch={batch_id}")
-        )
+        sp.write_epoch(v, sink, batch_id)
 
     sp.drain(stream, land_partial, ck)
 
     merged = (
-        spark.read.parquet(os.path.join(sink, "batch=*"))
+        sp.read_epochs(spark, sink)
         .groupBy("__v")
         .agg(
             F.sum("__k1").alias("__k1"),
@@ -1398,35 +1359,24 @@ def t25_stream_semdedup(spark, sf_dir):
             bq, coarse, "vec_id", "q_vec", 16, 64
         ).select("vec_id", "q_vec", "cluster_id", "__cdot")
         scored_b = scored_b.localCheckpoint(eager=True)
-        prior = [
-            os.path.join(store, d)
-            for d in (os.listdir(store) if os.path.isdir(store) else [])
-            if d.startswith("batch=")
-        ]
         all_scored = scored_b
-        if prior:
+        if batch_id:  # batches 0..batch_id-1 each landed a partial
             all_scored = all_scored.unionByName(
-                spark.read.parquet(*prior)
+                sp.read_epochs(spark, store, before=batch_id)
             )
         drops_b = semdedup_drops(
             scored_b, all_scored, "vec_id", "q_vec", min_dot=6400
         )
-        drops_b.write.mode("overwrite").parquet(
-            os.path.join(dsink, f"batch={batch_id}")
-        )
-        scored_b.write.mode("overwrite").parquet(
-            os.path.join(store, f"batch={batch_id}")
-        )
+        sp.write_epoch(drops_b, dsink, batch_id)
+        sp.write_epoch(scored_b, store, batch_id)
 
     stream = sp.read_file_stream(
         spark, stage, e.schema, max_files_per_trigger=1
     )
     sp.drain(stream, ingest, ck)
 
-    all_scored = spark.read.parquet(os.path.join(store, "batch=*"))
-    all_drops = spark.read.parquet(
-        os.path.join(dsink, "batch=*")
-    ).distinct()
+    all_scored = sp.read_epochs(spark, store)
+    all_drops = sp.read_epochs(spark, dsink).distinct()
     return all_scored.join(all_drops, "vec_id", "left_anti").select(
         "vec_id", "cluster_id"
     )
@@ -1476,11 +1426,10 @@ def t26_stream_heavy_hitters(spark, sf_dir):
     )
 
     def land_partial(batch_df, batch_id: int) -> None:
-        sk.cms_build(
+        sketch = sk.cms_build(
             bigrams(batch_df), "bigram", depth=4, width=1 << 12
-        ).write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch={batch_id}")
         )
+        sp.write_epoch(sketch, sink, batch_id)
 
     stream = sp.read_file_stream(
         spark, stage, docs.schema, max_files_per_trigger=1
@@ -1488,7 +1437,7 @@ def t26_stream_heavy_hitters(spark, sf_dir):
     sp.drain(stream, land_partial, ck)
 
     merged = (
-        spark.read.parquet(os.path.join(sink, "batch=*"))
+        sp.read_epochs(spark, sink)
         .groupBy("d", "bucket")
         .agg(F.sum("c").alias("c"))
     )
@@ -1680,7 +1629,7 @@ def t30_stream_twap(spark, sf_dir):
 
     def fold(batch_df, batch_id: int) -> None:
         sp_ = batch_df.sparkSession
-        prior = _epoch_state(sp_, state_root, state_schema, before=batch_id)
+        prior = sp.read_last_epoch(sp_, state_root, state_schema, before=batch_id)
         cur = batch_df.select("user_id", "ts_ms", "event_id", "v_fp")
         alle = prior.unionByName(cur)
         wk = Window.partitionBy("user_id").orderBy(
@@ -1710,16 +1659,15 @@ def t30_stream_twap(spark, sf_dir):
             F.lit(0).cast("bigint").alias("dur"),
             F.lit(0).cast("bigint").alias("wv"),
         )
-        (
+        sp.write_epoch(
             ivl.unionByName(owns)
             .groupBy("user_id", "di")
             .agg(
                 F.sum("own").cast("bigint").alias("own"),
                 F.sum("dur").cast("bigint").alias("dur"),
                 F.sum("wv").cast("bigint").alias("wv"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(part_root, f"batch={batch_id}"))
+            ),
+            part_root, batch_id
         )
         last = (
             alle.withColumn(
@@ -1733,9 +1681,7 @@ def t30_stream_twap(spark, sf_dir):
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        last.write.mode("overwrite").parquet(
-            os.path.join(state_root, f"epoch={batch_id}")
-        )
+        sp.write_epoch(last, state_root, batch_id)
 
     stream = sp.read_file_stream(
         spark,
@@ -1745,7 +1691,7 @@ def t30_stream_twap(spark, sf_dir):
     )
     sp.drain(stream, fold, os.path.join(base, "ck"))
 
-    st = _epoch_state(spark, state_root, state_schema)
+    st = sp.read_last_epoch(spark, state_root, state_schema)
     sd0 = div_day(F.col("ts_ms"))
     s_end = (sd0 + 1) * day_lit
     close = st.select(
@@ -1754,7 +1700,7 @@ def t30_stream_twap(spark, sf_dir):
         (s_end - F.col("ts_ms")).alias("dur"),
         (F.col("v_fp") * (s_end - F.col("ts_ms"))).alias("wv"),
     )
-    parts = spark.read.parquet(os.path.join(part_root, "batch=*"))
+    parts = sp.read_epochs(spark, part_root)
     return (
         parts.unionByName(close)
         .groupBy("user_id", "di")
@@ -1817,14 +1763,12 @@ def t31_stream_chi2(spark, sf_dir):
                 ).alias("__k2"),
             )
         )
-        bins.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch={batch_id}")
-        )
+        sp.write_epoch(bins, sink, batch_id)
 
     sp.drain(stream, land_partial, ck)
 
     merged = (
-        spark.read.parquet(os.path.join(sink, "batch=*"))
+        sp.read_epochs(spark, sink)
         .groupBy("__bucket")
         .agg(
             F.sum("__k1").alias("__k1"),
@@ -1867,7 +1811,7 @@ def t33_stream_holt(spark, sf_dir):
 
     def fold(batch_df, batch_id: int) -> None:
         sp_ = batch_df.sparkSession
-        prior = _epoch_state(sp_, state_root, state_schema, before=batch_id)
+        prior = sp.read_last_epoch(sp_, state_root, state_schema, before=batch_id)
 
         def continue_fold(pdf: pd.DataFrame) -> pd.DataFrame:
             st = pdf[pdf["__src"] == 0]
@@ -1903,11 +1847,10 @@ def t33_stream_holt(spark, sf_dir):
             batch_df.withColumn("__src", F.lit(1)),
             allowMissingColumns=True,
         )
-        alle.groupBy("user_id").applyInPandas(
+        state = alle.groupBy("user_id").applyInPandas(
             continue_fold, schema=state_schema
-        ).write.mode("overwrite").parquet(
-            os.path.join(state_root, f"epoch={batch_id}")
         )
+        sp.write_epoch(state, state_root, batch_id)
 
     stream = sp.read_file_stream(
         spark,
@@ -1917,7 +1860,7 @@ def t33_stream_holt(spark, sf_dir):
     )
     sp.drain(stream, fold, os.path.join(base, "ck"))
 
-    st = _epoch_state(spark, state_root, state_schema)
+    st = sp.read_last_epoch(spark, state_root, state_schema)
     return st.select(
         "user_id",
         F.col("n").alias("n_events"),
@@ -1967,7 +1910,7 @@ def t34_stream_hw_seasonal(spark, sf_dir):
 
     def fold(batch_df, batch_id: int) -> None:
         sp_ = batch_df.sparkSession
-        prior = _epoch_state(sp_, state_root, state_schema, before=batch_id)
+        prior = sp.read_last_epoch(sp_, state_root, state_schema, before=batch_id)
 
         def seq(a) -> float:
             t = 0.0
@@ -2016,11 +1959,10 @@ def t34_stream_hw_seasonal(spark, sf_dir):
             batch_df.withColumn("__src", F.lit(1)),
             allowMissingColumns=True,
         )
-        alle.groupBy("user_id").applyInPandas(
+        state = alle.groupBy("user_id").applyInPandas(
             continue_fold, schema=state_schema
-        ).write.mode("overwrite").parquet(
-            os.path.join(state_root, f"epoch={batch_id}")
         )
+        sp.write_epoch(state, state_root, batch_id)
 
     stream = sp.read_file_stream(
         spark,
@@ -2030,7 +1972,7 @@ def t34_stream_hw_seasonal(spark, sf_dir):
     )
     sp.drain(stream, fold, os.path.join(base, "ck"))
 
-    st = _epoch_state(spark, state_root, state_schema)
+    st = sp.read_last_epoch(spark, state_root, state_schema)
     return st.filter(F.col("s").isNotNull()).select(
         "user_id",
         F.col("n").alias("n_events"),
@@ -2107,15 +2049,12 @@ def t35_stream_dedup_clusters(spark, sf_dir):
             F.size("__shs").alias("sz"),
             F.explode("__shs").alias("__s"),
         )
-        sh.write.mode("overwrite").parquet(
-            os.path.join(idx_root, f"epoch={batch_id}")
-        )
+        sp.write_epoch(sh, idx_root, batch_id)
 
         # 2. pairs touching this batch, against the accumulated index
-        full = sp_.read.parquet(os.path.join(idx_root, "epoch=*"))
-        bat = sp_.read.parquet(
-            os.path.join(idx_root, f"epoch={batch_id}")
-        )
+        # (the partials up to and including this batch's own)
+        full = sp.read_epochs(sp_, idx_root, before=batch_id + 1)
+        bat = sp.read_last_epoch(sp_, idx_root, sh.schema, batch_id + 1)
         cand = full.select(
             F.col("id").alias("__ia"), F.col("sz").alias("__za"), "__s"
         ).join(
@@ -2156,17 +2095,18 @@ def t35_stream_dedup_clusters(spark, sf_dir):
 
         # 3. merge labels — affected components only
         # (operators/components.py:incremental_components_update)
-        prior = _epoch_state(sp_, state_root, _LABELS, before=batch_id)
-        incremental_components_update(prior, new_pairs).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(state_root, f"epoch={batch_id}"))
+        prior = sp.read_last_epoch(sp_, state_root, _LABELS, before=batch_id)
+        sp.write_epoch(
+            incremental_components_update(prior, new_pairs),
+            state_root, batch_id
+        )
 
     stream = sp.read_file_stream(
         spark, stage, docs.schema, max_files_per_trigger=1
     )
     sp.drain(stream, fold, os.path.join(base, "ck"))
 
-    return _epoch_state(spark, state_root, _LABELS)
+    return sp.read_last_epoch(spark, state_root, _LABELS)
 
 
 @q("t32_stream_bm25", _ns.ORACLES["x4_bm25"])
@@ -2203,13 +2143,13 @@ def t32_stream_bm25(spark, sf_dir):
     )
 
     def land_postings(batch_df, batch_id: int) -> None:
-        term_postings(batch_df, "doc_id", "text").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(sink, f"batch={batch_id}"))
+        sp.write_epoch(
+            term_postings(batch_df, "doc_id", "text"), sink, batch_id
+        )
 
     sp.drain(stream, land_postings, ck)
 
-    postings = spark.read.parquet(os.path.join(sink, "batch=*"))
+    postings = sp.read_epochs(spark, sink)
     q_terms = query_terms(spark, _ns._BM25_QUERIES)
     return bm25_from_postings(
         postings, "doc_id", q_terms, k1=1.2, b=0.75, k=10
@@ -2262,9 +2202,7 @@ def t29_stream_dataset_card(spark, sf_dir):
             ),
             F.first(F.length("text").cast("bigint")).alias("chars"),
         )
-        part.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch={batch_id}")
-        )
+        sp.write_epoch(part, sink, batch_id)
 
     stream = sp.read_file_stream(
         spark, stage, docs.schema, max_files_per_trigger=1
@@ -2272,7 +2210,7 @@ def t29_stream_dataset_card(spark, sf_dir):
     sp.drain(stream, land_partial, ck)
 
     merged = (
-        spark.read.parquet(os.path.join(sink, "batch=*"))
+        sp.read_epochs(spark, sink)
         .groupBy("lang", "text", "toks", "chars")
         .agg(F.sum("n").cast("bigint").alias("n"))
     )
@@ -2332,19 +2270,18 @@ def t36_stream_bpe(spark, sf_dir):
     )
 
     def land_partial(batch_df, batch_id: int) -> None:
-        (
+        sp.write_epoch(
             batch_df.select(F.explode(tokens(F.col("text"))).alias("w"))
             .filter(F.length("w") > 0)
             .groupBy("w")
-            .agg(F.count(F.lit(1)).alias("f"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch={batch_id}"))
+            .agg(F.count(F.lit(1)).alias("f")),
+            sink, batch_id
         )
 
     sp.drain(stream, land_partial, ck)
 
     vocab = (
-        spark.read.parquet(os.path.join(sink, "batch=*"))
+        sp.read_epochs(spark, sink)
         .groupBy("w")
         .agg(F.sum("f").alias("f"))
     )
@@ -2379,19 +2316,18 @@ def t39_stream_wordpiece(spark, sf_dir):
     )
 
     def land_partial(batch_df, batch_id: int) -> None:
-        (
+        sp.write_epoch(
             batch_df.select(F.explode(tokens(F.col("text"))).alias("w"))
             .filter(F.length("w") > 0)
             .groupBy("w")
-            .agg(F.count(F.lit(1)).alias("f"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch={batch_id}"))
+            .agg(F.count(F.lit(1)).alias("f")),
+            sink, batch_id
         )
 
     sp.drain(stream, land_partial, ck)
 
     vocab = (
-        spark.read.parquet(os.path.join(sink, "batch=*"))
+        sp.read_epochs(spark, sink)
         .groupBy("w")
         .agg(F.sum("f").alias("f"))
     )
@@ -2453,20 +2389,19 @@ def t40_stream_wordpiece_infer(spark, sf_dir):
         tok = batch_df.select(
             "doc_id", F.explode(tokens(F.col("text"))).alias("w")
         ).filter(F.length("w") > 0)
-        (
+        sp.write_epoch(
             tok.join(F.broadcast(seg), "w")
             .groupBy("doc_id")
             .agg(
                 F.count(F.lit(1)).alias("n_words"),
                 F.sum(F.size("seg")).cast("bigint").alias("n_wp_tokens"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch={batch_id}"))
+            ),
+            sink, batch_id
         )
 
     sp.drain(stream, land_counts, ck)
 
-    return spark.read.parquet(os.path.join(sink, "batch=*")).select(
+    return sp.read_epochs(spark, sink).select(
         "doc_id", "n_words", "n_wp_tokens"
     )
 
@@ -2526,7 +2461,7 @@ def t41_stream_nb_gate(spark, sf_dir):
             "__is_p",
             F.explode(_hashed_features(F.col("text"), 128)).alias("bucket"),
         )
-        (
+        sp.write_epoch(
             feat.groupBy("bucket")
             .agg(
                 F.sum(F.when(F.col("__is_p"), 1).otherwise(0))
@@ -2535,11 +2470,10 @@ def t41_stream_nb_gate(spark, sf_dir):
                 F.sum(F.when(F.col("__is_p"), 0).otherwise(1))
                 .cast("bigint")
                 .alias("c_neg"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"counts/batch={batch_id}"))
+            ),
+            os.path.join(sink, "counts"), batch_id
         )
-        (
+        sp.write_epoch(
             lab.agg(
                 F.sum(F.when(F.col("__is_p"), 1).otherwise(0))
                 .cast("bigint")
@@ -2547,21 +2481,19 @@ def t41_stream_nb_gate(spark, sf_dir):
                 F.sum(F.when(F.col("__is_p"), 0).otherwise(1))
                 .cast("bigint")
                 .alias("n_neg"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"labels/batch={batch_id}"))
+            ),
+            os.path.join(sink, "labels"), batch_id
         )
-        (
+        sp.write_epoch(
             feat.groupBy("doc_id", "bucket")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"docbuckets/batch={batch_id}"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n")),
+            os.path.join(sink, "docbuckets"), batch_id
         )
 
     sp.drain(stream, land_partials, ck)
 
     counts = (
-        spark.read.parquet(os.path.join(sink, "counts/batch=*"))
+        sp.read_epochs(spark, os.path.join(sink, "counts"))
         .groupBy("bucket")
         .agg(
             F.sum("c_pos").cast("bigint").alias("c_target"),
@@ -2570,13 +2502,13 @@ def t41_stream_nb_gate(spark, sf_dir):
     )
     ratios = ratio_table(counts, n_buckets=128)
     pri = prior_counts_to_fp(
-        spark.read.parquet(os.path.join(sink, "labels/batch=*")).agg(
+        sp.read_epochs(spark, os.path.join(sink, "labels")).agg(
             F.sum("n_pos").cast("bigint").alias("n_pos"),
             F.sum("n_neg").cast("bigint").alias("n_neg"),
         )
     )
     docbuckets = (
-        spark.read.parquet(os.path.join(sink, "docbuckets/batch=*"))
+        sp.read_epochs(spark, os.path.join(sink, "docbuckets"))
         .groupBy("doc_id", "bucket")
         .agg(F.sum("n").cast("bigint").alias("n"))
     )
@@ -2639,15 +2571,14 @@ def t42_stream_gold_topk(spark, sf_dir):
     )
 
     def land_topk(batch_df, batch_id: int) -> None:
-        (
-            gold_topk_for_fires(batch_df, stations, k=3)
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch={batch_id}"))
+        sp.write_epoch(
+            gold_topk_for_fires(batch_df, stations, k=3),
+            sink, batch_id
         )
 
     sp.drain(stream, land_topk, ck)
 
-    return spark.read.parquet(os.path.join(sink, "batch=*"))
+    return sp.read_epochs(spark, sink)
 
 
 @q("t43_stream_rag_context", _ns._RAG_MMR_SQL)
@@ -2696,21 +2627,18 @@ def t43_stream_rag_context(spark, sf_dir):
     )
 
     def serve_contexts(batch_df, batch_id: int) -> None:
-        (
-            rag_context_mmr(
-                emb, docs, n_queries=5, k_pool=10, k_select=5,
-                lam_num=7, lam_den=10, shingle_n=2, containment_num=3,
-                containment_den=20, token_budget=250,
-                query_ids=batch_df.select("vec_id"),
-                quantized=store,
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch={batch_id}"))
+        ctx = rag_context_mmr(
+            emb, docs, n_queries=5, k_pool=10, k_select=5,
+            lam_num=7, lam_den=10, shingle_n=2, containment_num=3,
+            containment_den=20, token_budget=250,
+            query_ids=batch_df.select("vec_id"),
+            quantized=store,
         )
+        sp.write_epoch(ctx, sink, batch_id)
 
     sp.drain(stream, serve_contexts, ck)
 
-    return spark.read.parquet(os.path.join(sink, "batch=*")).select(
+    return sp.read_epochs(spark, sink).select(
         "q_id", "mmr_rank", "doc_id", "rel_fp", "n_tokens", "cum_tokens"
     )
 
@@ -2763,19 +2691,14 @@ def t45_stream_decontaminate(spark, sf_dir):
     )
 
     def screen_batch(batch_df, batch_id: int) -> None:
-        (
-            decontaminate_against(
-                batch_df, ev, "doc_id", "text", shingle_n=4
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch={batch_id}"))
+        screened = decontaminate_against(
+            batch_df, ev, "doc_id", "text", shingle_n=4
         )
+        sp.write_epoch(screened, sink, batch_id)
 
     sp.drain(stream, screen_batch, ck)
 
-    return spark.read.parquet(os.path.join(sink, "batch=*")).select(
-        "doc_id", "n_overlap"
-    )
+    return sp.read_epochs(spark, sink).select("doc_id", "n_overlap")
 
 
 @q("t44_stream_nb_gate_sweep", _ns._NB_SWEEP_SQL)
@@ -2833,7 +2756,7 @@ def t44_stream_nb_gate_sweep(spark, sf_dir):
             "__is_p",
             F.explode(_hashed_features(F.col("text"), 128)).alias("bucket"),
         )
-        (
+        sp.write_epoch(
             tr_feat.groupBy("bucket")
             .agg(
                 F.sum(F.when(F.col("__is_p"), 1).otherwise(0))
@@ -2842,11 +2765,10 @@ def t44_stream_nb_gate_sweep(spark, sf_dir):
                 F.sum(F.when(F.col("__is_p"), 0).otherwise(1))
                 .cast("bigint")
                 .alias("c_neg"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"counts/batch={batch_id}"))
+            ),
+            os.path.join(sink, "counts"), batch_id
         )
-        (
+        sp.write_epoch(
             lab.filter(F.col("__tr"))
             .agg(
                 F.sum(F.when(F.col("__is_p"), 1).otherwise(0))
@@ -2855,12 +2777,11 @@ def t44_stream_nb_gate_sweep(spark, sf_dir):
                 F.sum(F.when(F.col("__is_p"), 0).otherwise(1))
                 .cast("bigint")
                 .alias("n_neg"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"labels/batch={batch_id}"))
+            ),
+            os.path.join(sink, "labels"), batch_id
         )
         ho = lab.filter(~F.col("__tr"))
-        (
+        sp.write_epoch(
             ho.select(
                 "doc_id",
                 F.explode(_hashed_features(F.col("text"), 128)).alias(
@@ -2868,20 +2789,18 @@ def t44_stream_nb_gate_sweep(spark, sf_dir):
                 ),
             )
             .groupBy("doc_id", "bucket")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"hobuckets/batch={batch_id}"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n")),
+            os.path.join(sink, "hobuckets"), batch_id
         )
-        (
-            ho.select("doc_id", "__is_p")
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"holabels/batch={batch_id}"))
+        sp.write_epoch(
+            ho.select("doc_id", "__is_p"),
+            os.path.join(sink, "holabels"), batch_id
         )
 
     sp.drain(stream, land_partials, ck)
 
     counts = (
-        spark.read.parquet(os.path.join(sink, "counts/batch=*"))
+        sp.read_epochs(spark, os.path.join(sink, "counts"))
         .groupBy("bucket")
         .agg(
             F.sum("c_pos").cast("bigint").alias("c_target"),
@@ -2890,17 +2809,17 @@ def t44_stream_nb_gate_sweep(spark, sf_dir):
     )
     ratios = ratio_table(densify_counts(counts, 128, spark), n_buckets=128)
     pri = prior_counts_to_fp(
-        spark.read.parquet(os.path.join(sink, "labels/batch=*")).agg(
+        sp.read_epochs(spark, os.path.join(sink, "labels")).agg(
             F.sum("n_pos").cast("bigint").alias("n_pos"),
             F.sum("n_neg").cast("bigint").alias("n_neg"),
         )
     )
     hobuckets = (
-        spark.read.parquet(os.path.join(sink, "hobuckets/batch=*"))
+        sp.read_epochs(spark, os.path.join(sink, "hobuckets"))
         .groupBy("doc_id", "bucket")
         .agg(F.sum("n").cast("bigint").alias("n"))
     )
-    holabels = spark.read.parquet(os.path.join(sink, "holabels/batch=*"))
+    holabels = sp.read_epochs(spark, os.path.join(sink, "holabels"))
     margins = (
         hobuckets.join(
             F.broadcast(ratios.select("bucket", "w_fp")), "bucket"
@@ -2963,28 +2882,26 @@ def t37_stream_dsir(spark, sf_dir):
             (F.col("lang") == "en").alias("__is_t"),
             F.explode(_hashed_features(F.col("text"), 128)).alias("bucket"),
         )
-        (
+        sp.write_epoch(
             feat.groupBy("bucket")
             .agg(
                 F.sum(F.when(F.col("__is_t"), 1).otherwise(0))
                 .cast("bigint")
                 .alias("c_target"),
                 F.count(F.lit(1)).cast("bigint").alias("c_raw"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"counts/batch={batch_id}"))
+            ),
+            os.path.join(sink, "counts"), batch_id
         )
-        (
+        sp.write_epoch(
             feat.groupBy("doc_id", "bucket")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"docbuckets/batch={batch_id}"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n")),
+            os.path.join(sink, "docbuckets"), batch_id
         )
 
     sp.drain(stream, land_partials, ck)
 
     counts = (
-        spark.read.parquet(os.path.join(sink, "counts/batch=*"))
+        sp.read_epochs(spark, os.path.join(sink, "counts"))
         .groupBy("bucket")
         .agg(
             F.sum("c_target").cast("bigint").alias("c_target"),
@@ -2993,7 +2910,7 @@ def t37_stream_dsir(spark, sf_dir):
     )
     ratios = ratio_table(counts, n_buckets=128)
     docbuckets = (
-        spark.read.parquet(os.path.join(sink, "docbuckets/batch=*"))
+        sp.read_epochs(spark, os.path.join(sink, "docbuckets"))
         .groupBy("doc_id", "bucket")
         .agg(F.sum("n").cast("bigint").alias("n"))
     )
@@ -3046,24 +2963,21 @@ def t38_stream_line_dedup(spark, sf_dir):
             F.col("__cid").alias("cid"),
             F.col("__chunk").alias("chunk"),
         )
-        ch.write.mode("overwrite").parquet(
-            os.path.join(sink, f"chunks/batch={batch_id}")
-        )
-        (
+        sp.write_epoch(ch, os.path.join(sink, "chunks"), batch_id)
+        sp.write_epoch(
             ch.groupBy("chunk")
-            .agg(F.min(F.struct("doc_id", "cid")).alias("first"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"firsts/batch={batch_id}"))
+            .agg(F.min(F.struct("doc_id", "cid")).alias("first")),
+            os.path.join(sink, "firsts"), batch_id
         )
 
     sp.drain(stream, land_partials, ck)
 
     firsts = (
-        spark.read.parquet(os.path.join(sink, "firsts/batch=*"))
+        sp.read_epochs(spark, os.path.join(sink, "firsts"))
         .groupBy("chunk")
         .agg(F.min("first").alias("first"))
     )
-    ch = spark.read.parquet(os.path.join(sink, "chunks/batch=*"))
+    ch = sp.read_epochs(spark, os.path.join(sink, "chunks"))
     kept = (
         ch.join(firsts, "chunk")
         .filter(
@@ -3134,19 +3048,18 @@ def t46_stream_unimax(spark, sf_dir):
     )
 
     def land_manifest(batch_df, batch_id: int) -> None:
-        (
+        sp.write_epoch(
             batch_df.select(
                 "doc_id",
                 "lang",
                 token_count(F.col("text")).cast("bigint").alias("n_tokens"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch={batch_id}"))
+            ),
+            sink, batch_id
         )
 
     sp.drain(stream, land_manifest, ck)
 
-    manifest = spark.read.parquet(os.path.join(sink, "batch=*"))
+    manifest = sp.read_epochs(spark, sink)
     return unimax_select_from_tokens(
         manifest, "doc_id", "lang", token_budget=None, max_epochs=2,
         budget_num=3, budget_den=2,
@@ -3216,18 +3129,15 @@ def t47_stream_search_serving(spark, sf_dir):
         ]
         if not batch_queries:
             return
-        (
-            search_serving(
-                d, batch_queries, postings=store,
-                shared_stats=shared_stats,
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch={batch_id}"))
+        served = search_serving(
+            d, batch_queries, postings=store,
+            shared_stats=shared_stats,
         )
+        sp.write_epoch(served, sink, batch_id)
 
     sp.drain(stream, serve_requests, ck)
 
-    return spark.read.parquet(os.path.join(sink, "batch=*")).select(
+    return sp.read_epochs(spark, sink).select(
         "query_id", "doc_id", "rrf_score", "rk", "n_tokens", "cum_tokens"
     )
 
@@ -3269,18 +3179,15 @@ def t48_stream_winnowing(spark, sf_dir):
     )
 
     def land_fingerprints(batch_df, batch_id: int) -> None:
-        (
-            winnowing_fingerprints(
-                batch_df, "doc_id", "text", k=3, w=4,
-                token_hash=poly_token_hash,
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch={batch_id}"))
+        fps = winnowing_fingerprints(
+            batch_df, "doc_id", "text", k=3, w=4,
+            token_hash=poly_token_hash,
         )
+        sp.write_epoch(fps, sink, batch_id)
 
     sp.drain(stream, land_fingerprints, ck)
 
-    fp = spark.read.parquet(os.path.join(sink, "batch=*"))
+    fp = sp.read_epochs(spark, sink)
     a = fp.select(F.col("doc_id").alias("id_a"), "fp")
     b = fp.select(F.col("doc_id").alias("id_b"), "fp")
     return (
@@ -3359,18 +3266,15 @@ def t49_stream_hybrid_serving(spark, sf_dir):
         ]
         if not batch_queries:
             return
-        (
-            hybrid_serving(
-                d, e, batch_queries, postings=postings, quantized=store,
-                shared_stats=shared_stats,
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch={batch_id}"))
+        served = hybrid_serving(
+            d, e, batch_queries, postings=postings, quantized=store,
+            shared_stats=shared_stats,
         )
+        sp.write_epoch(served, sink, batch_id)
 
     sp.drain(stream, serve_requests, ck)
 
-    return spark.read.parquet(os.path.join(sink, "batch=*")).select(
+    return sp.read_epochs(spark, sink).select(
         "query_id", "doc_id", "rrf_score", "rk", "n_tokens", "cum_tokens"
     )
 
@@ -3414,9 +3318,9 @@ def t50_stream_hybrid_index(spark, sf_dir):
     d_sink = os.path.join(base, "postings")
 
     def land_postings(batch_df, batch_id: int) -> None:
-        term_postings(batch_df, "doc_id", "text").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(d_sink, f"batch={batch_id}"))
+        sp.write_epoch(
+            term_postings(batch_df, "doc_id", "text"), d_sink, batch_id
+        )
 
     stream = sp.read_file_stream(
         spark, d_stage, "doc_id BIGINT, text STRING", max_files_per_trigger=1
@@ -3429,17 +3333,18 @@ def t50_stream_hybrid_index(spark, sf_dir):
     e_sink = os.path.join(base, "store")
 
     def land_store(batch_df, batch_id: int) -> None:
-        int8_store(batch_df).select("vec_id", "q_vec", "__n8").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(e_sink, f"batch={batch_id}"))
+        sp.write_epoch(
+            int8_store(batch_df).select("vec_id", "q_vec", "__n8"),
+            e_sink, batch_id
+        )
 
     stream = sp.read_file_stream(
         spark, e_stage, e.schema, max_files_per_trigger=1
     )
     sp.drain(stream, land_store, os.path.join(base, "ck2"))
 
-    postings = spark.read.parquet(os.path.join(d_sink, "batch=*"))
-    store = spark.read.parquet(os.path.join(e_sink, "batch=*"))
+    postings = sp.read_epochs(spark, d_sink)
+    store = sp.read_epochs(spark, e_sink)
     return hybrid_serving(
         d, e, _ns._BM25_QUERIES, postings=postings, quantized=store
     )
@@ -3486,18 +3391,15 @@ def t51_stream_winnowing_clusters(spark, sf_dir):
     )
 
     def land_fingerprints(batch_df, batch_id: int) -> None:
-        (
-            winnowing_fingerprints(
-                batch_df, "doc_id", "text", k=3, w=4,
-                token_hash=poly_token_hash,
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch={batch_id}"))
+        fps = winnowing_fingerprints(
+            batch_df, "doc_id", "text", k=3, w=4,
+            token_hash=poly_token_hash,
         )
+        sp.write_epoch(fps, sink, batch_id)
 
     sp.drain(stream, land_fingerprints, ck)
 
-    fp = spark.read.parquet(os.path.join(sink, "batch=*"))
+    fp = sp.read_epochs(spark, sink)
     a = fp.select(F.col("doc_id").alias("id_a"), "fp")
     b = fp.select(F.col("doc_id").alias("id_b"), "fp")
     pairs = (
@@ -3550,9 +3452,9 @@ def t52_stream_hybrid_loop(spark, sf_dir):
     d_sink = os.path.join(base, "postings")
 
     def land_postings(batch_df, batch_id: int) -> None:
-        term_postings(batch_df, "doc_id", "text").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(d_sink, f"batch={batch_id}"))
+        sp.write_epoch(
+            term_postings(batch_df, "doc_id", "text"), d_sink, batch_id
+        )
 
     stream = sp.read_file_stream(
         spark, d_stage, "doc_id BIGINT, text STRING", max_files_per_trigger=1
@@ -3565,9 +3467,10 @@ def t52_stream_hybrid_loop(spark, sf_dir):
     e_sink = os.path.join(base, "store")
 
     def land_store(batch_df, batch_id: int) -> None:
-        int8_store(batch_df).select("vec_id", "q_vec", "__n8").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(e_sink, f"batch={batch_id}"))
+        sp.write_epoch(
+            int8_store(batch_df).select("vec_id", "q_vec", "__n8"),
+            e_sink, batch_id
+        )
 
     stream = sp.read_file_stream(
         spark, e_stage, e.schema, max_files_per_trigger=1
@@ -3577,12 +3480,8 @@ def t52_stream_hybrid_loop(spark, sf_dir):
     # --- serving stream over the two MERGED maintained artifacts ---
     # pinned for the request loop (the t49 discipline: many request
     # batches, one materialization; persist() on a real cluster)
-    postings = spark.read.parquet(
-        os.path.join(d_sink, "batch=*")
-    ).localCheckpoint(eager=True)
-    store = spark.read.parquet(
-        os.path.join(e_sink, "batch=*")
-    ).localCheckpoint(eager=True)
+    postings = sp.read_epochs(spark, d_sink).localCheckpoint(eager=True)
+    store = sp.read_epochs(spark, e_sink).localCheckpoint(eager=True)
     # maintained stats triple next to the merged postings (r14,
     # ADVICE r13): computed once for the whole request loop instead
     # of re-pinned per batch
@@ -3605,21 +3504,18 @@ def t52_stream_hybrid_loop(spark, sf_dir):
         ]
         if not batch_queries:
             return
-        (
-            hybrid_serving(
-                d, e, batch_queries, postings=postings, quantized=store,
-                shared_stats=shared_stats,
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(r_sink, f"batch={batch_id}"))
+        served = hybrid_serving(
+            d, e, batch_queries, postings=postings, quantized=store,
+            shared_stats=shared_stats,
         )
+        sp.write_epoch(served, r_sink, batch_id)
 
     stream = sp.read_file_stream(
         spark, r_stage, req.schema, max_files_per_trigger=1
     )
     sp.drain(stream, serve_requests, os.path.join(base, "ck3"))
 
-    return spark.read.parquet(os.path.join(r_sink, "batch=*")).select(
+    return sp.read_epochs(spark, r_sink).select(
         "query_id", "doc_id", "rrf_score", "rk", "n_tokens", "cum_tokens"
     )
 
@@ -3681,17 +3577,14 @@ def t53_stream_winnowing_incremental(spark, sf_dir):
         )
 
         sp_ = batch_df.sparkSession
-        winnowing_fingerprints(
+        fps = winnowing_fingerprints(
             batch_df, "doc_id", "text", k=3, w=4,
             token_hash=poly_token_hash,
-        ).write.mode("overwrite").parquet(
-            os.path.join(idx_root, f"epoch={batch_id}")
         )
+        sp.write_epoch(fps, idx_root, batch_id)
 
-        full = sp_.read.parquet(os.path.join(idx_root, "epoch=*"))
-        bat = sp_.read.parquet(
-            os.path.join(idx_root, f"epoch={batch_id}")
-        )
+        full = sp.read_epochs(sp_, idx_root, before=batch_id + 1)
+        bat = sp.read_last_epoch(sp_, idx_root, fps.schema, batch_id + 1)
         new_pairs = (
             full.select(F.col("doc_id").alias("__ia"), "fp")
             .join(bat.select(F.col("doc_id").alias("__ib"), "fp"), "fp")
@@ -3707,17 +3600,18 @@ def t53_stream_winnowing_incremental(spark, sf_dir):
             .select("id_a", "id_b")
         )
 
-        prior = _epoch_state(sp_, state_root, _LABELS, before=batch_id)
-        incremental_components_update(prior, new_pairs).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(state_root, f"epoch={batch_id}"))
+        prior = sp.read_last_epoch(sp_, state_root, _LABELS, before=batch_id)
+        sp.write_epoch(
+            incremental_components_update(prior, new_pairs),
+            state_root, batch_id
+        )
 
     stream = sp.read_file_stream(
         spark, stage, docs.schema, max_files_per_trigger=1
     )
     sp.drain(stream, fold, os.path.join(base, "ck"))
 
-    labels = _epoch_state(spark, state_root, _LABELS)
+    labels = sp.read_last_epoch(spark, state_root, _LABELS)
     return canonical_per_cluster(
         d, None, F.col("lang") == "en", labels=labels
     )

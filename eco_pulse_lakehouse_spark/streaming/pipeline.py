@@ -13,7 +13,11 @@ Tests and the streaming corpus drive these with file sources and
 same DataFrame in, DataFrame out. This module owns the drain policy
 for those hermetic streams — ``drain`` (foreachBatch),
 ``run_to_parquet`` and ``run_to_memory`` are the only places that
-set a trigger and wait for a query.
+set a trigger and wait for a query. It also owns the epoch sink that
+foreachBatch bodies land per-batch partials in: ``write_epoch``,
+``list_epochs``, and the readers ``read_epochs`` (the union) and
+``read_last_epoch`` (a fold's carried state), which read with the
+schema in the partials' parquet footers — no inference job, no glob.
 
 Scale notes: stateful dedup keeps one state row per key inside the
 watermark horizon — key the dedup on a compact natural key and keep
@@ -24,15 +28,18 @@ windows on watermark advance (append mode) — no unbounded state.
 from __future__ import annotations
 
 import contextlib
+import json
 import os
-import tempfile
-import uuid
+import re
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import StructType
+
+from eco_pulse_lakehouse_spark.session import local_frame
 
 
 def read_file_stream(
@@ -149,7 +156,7 @@ def run_to_memory(
 def run_to_parquet(
     df: DataFrame,
     path: str,
-    checkpoint: str | None = None,
+    checkpoint: str,
     output_mode: str = "append",
     state_partitions: int | None = None,
 ) -> None:
@@ -158,9 +165,6 @@ def run_to_parquet(
     checkpoint is a no-op for already-committed source files —
     exactly-once to the sink (T2). ``state_partitions`` sizes the
     stateful-operator partitioning (see _scoped_state_partitions)."""
-    checkpoint = checkpoint or os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_ckpt_{uuid.uuid4().hex}"
-    )
     with _scoped_state_partitions(df.sparkSession, state_partitions):
         _run_available(
             df.writeStream.format("parquet")
@@ -187,13 +191,82 @@ def drain(
     checkpoint records committed batches: draining again with the
     same checkpoint and no new files runs no batch, and a batch that
     failed mid-way is replayed under the SAME id — which is why the
-    batch bodies key their outputs on it (``batch=<id>`` /
-    ``epoch=<id>`` overwrite)."""
+    batch bodies land their outputs with ``write_epoch``, keyed on
+    it."""
     return _run_available(
         stream.writeStream.foreachBatch(fn).option(
             "checkpointLocation", checkpoint
         )
     )
+
+
+def write_epoch(df: DataFrame, root: str, epoch_id: int) -> None:
+    """Land ``df`` as the partial ``root/epoch=<epoch_id>``, with
+    overwrite: a replayed batch rewrites its own partial instead of
+    appending a duplicate."""
+    df.write.mode("overwrite").parquet(
+        os.path.join(root, f"epoch={epoch_id}")
+    )
+
+
+def list_epochs(root: str, before: int | None = None) -> list[int]:
+    """Sorted numeric ids ``n < before`` (all when ``before`` is None)
+    of the partials under ``root``; none for a missing root. Entries
+    that are not ``epoch=<digits>`` — a Spark temporary or _committed
+    dir landing under the root — are skipped, not raised on inside
+    foreachBatch."""
+    names = os.listdir(root) if os.path.isdir(root) else []
+    ms = (re.fullmatch(r"epoch=([0-9]+)", n) for n in names)
+    ids = (int(m.group(1)) for m in ms if m)
+    return sorted(e for e in ids if before is None or e < before)
+
+
+def read_epochs(
+    spark: SparkSession, root: str, before: int | None = None
+) -> DataFrame:
+    """The union of the partials ``root/epoch=<n>`` with ``n < before``
+    (all of them when ``before`` is None). Raises FileNotFoundError
+    when there is none: a serve-side read always follows a drain that
+    landed at least one batch."""
+    ids = list_epochs(root, before)
+    if not ids:
+        raise FileNotFoundError(f"no epoch partial under {root}")
+    return _read_partials(spark, root, ids)
+
+
+def read_last_epoch(
+    spark: SparkSession,
+    root: str,
+    schema: str | StructType,
+    before: int | None = None,
+) -> DataFrame:
+    """The carried state of an epoch-keyed fold: the latest partial
+    ``root/epoch=<n>`` with ``n < before`` (the last one when
+    ``before`` is None), or an empty ``schema`` frame when there is
+    none. A batch passes its own id as ``before``, so a replayed
+    batch reads the same predecessor state as its first attempt and
+    never its own partial."""
+    ids = list_epochs(root, before)
+    if not ids:
+        return local_frame(spark, [], schema)
+    return _read_partials(spark, root, ids[-1:])
+
+
+def _read_partials(
+    spark: SparkSession, root: str, ids: list[int]
+) -> DataFrame:
+    """Read the partial directories of ``ids`` with the Spark schema
+    the writer recorded in the first one's parquet footer (every
+    partial holds at least one part file, an empty batch included).
+    Known schema and explicit leaf directories: no footer-inference
+    job, no partition column, and no ``_spark_metadata`` probe."""
+    dirs = [os.path.join(root, f"epoch={e}") for e in ids]
+    part = min(f for f in os.listdir(dirs[0]) if f.endswith(".parquet"))
+    footer = pq.read_schema(os.path.join(dirs[0], part)).metadata
+    schema = StructType.fromJson(
+        json.loads(footer[b"org.apache.spark.sql.parquet.row.metadata"])
+    )
+    return spark.read.schema(schema).parquet(*dirs)
 
 
 def _run_available(writer: DataStreamWriter) -> StreamingQuery:

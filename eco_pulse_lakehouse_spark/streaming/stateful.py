@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from eco_pulse_lakehouse_spark.streaming.pipeline import drain
+from eco_pulse_lakehouse_spark.streaming.pipeline import drain, write_epoch
 
 
 def running_totals_stream(
@@ -260,10 +260,11 @@ def foreach_batch_fanout(
     ingest pipeline ends up needing.
 
     foreachBatch gives no transactional guarantee across two writes,
-    so exactly-once is recovered by construction: each sink writes
-    its batch under an ``epoch=<id>`` directory with overwrite — a
-    replayed batch (crash between the two writes, speculative rerun)
-    REWRITES the same directories instead of appending duplicates.
+    so exactly-once is recovered by construction: each sink lands its
+    batch as the partial ``epoch=<id>`` with overwrite
+    (streaming/pipeline.py:write_epoch) — a replayed batch (crash
+    between the two writes, speculative rerun) REWRITES the same
+    directories instead of appending duplicates.
     Idempotence holds per-epoch regardless of which write crashed;
     the checkpoint dedups source offsets across restarts. The batch
     is persisted so the two sinks share one source scan, not two.
@@ -277,8 +278,8 @@ def foreach_batch_fanout(
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         b = batch_df.persist()
-        b.write.mode("overwrite").parquet(f"{detail_path}/epoch={epoch_id}")
-        (
+        write_epoch(b, detail_path, epoch_id)
+        write_epoch(
             b.agg(
                 F.count(F.lit(1)).alias("n_rows"),
                 F.coalesce(
@@ -288,9 +289,8 @@ def foreach_batch_fanout(
                     F.lit(0).cast("long"),
                 ).alias("value_sum_fp"),
             )
-            .withColumn("epoch", F.lit(epoch_id).cast("long"))
-            .write.mode("overwrite")
-            .parquet(f"{metrics_path}/epoch={epoch_id}")
+            .withColumn("epoch", F.lit(epoch_id).cast("long")),
+            metrics_path, epoch_id
         )
         b.unpersist()
 

@@ -156,45 +156,83 @@ def test_stream_bpe_equals_batch_merges(spark):
 
 
 def test_epoch_listing_ignores_stray_entries(spark, tmp_path):
-    """ADVICE r06: the epoch-state listing must skip non-numeric
-    entries (Spark temp/_committed dirs landing under the state
-    root) instead of raising inside foreachBatch, and must sort
+    """The epoch sink of streaming/pipeline.py. ``list_epochs`` must
+    skip non-numeric entries (Spark temp/_committed dirs landing under
+    the root) instead of raising inside foreachBatch, and must sort
     numerically, not lexically.
 
-    ``_epoch_state`` is the epoch-keyed replay invariant of the
-    carry-state folds (t30/t33/t34/t35/t53): batch k reads the latest
-    epoch strictly before k — so a replayed batch never reads its own
-    partial — and the serve side reads the last epoch."""
-    from eco_pulse_lakehouse_spark.corpus.streaming_corpus import (
-        _epoch_state,
-        _epochs,
-    )
+    ``read_epochs`` is the serve-side union of the partials (those
+    before ``before`` when given); ``read_last_epoch`` is the
+    epoch-keyed replay invariant of the carry-state folds
+    (t30/t33/t34/t35/t53): batch k reads the latest epoch strictly
+    before k — so a replayed batch never reads its own partial — and
+    the serve side reads the last epoch. Both read with the schema
+    in the partials' parquet footers: the same schema and rows as a
+    glob read, and no Spark job."""
+    import pytest
+
     from eco_pulse_lakehouse_spark.session import local_frame
 
     root = tmp_path / "state"
-    root.mkdir()
     schema = "tag BIGINT, note STRING"
     for e in (0, 2, 10):
-        local_frame(spark, [(e, f"epoch {e}")], schema).write.parquet(
-            str(root / f"epoch={e}")
+        sp.write_epoch(
+            local_frame(spark, [(e, f"epoch {e}")], schema), str(root), e
         )
     for name in ["epoch=_tmp", "epoch=", "_committed_123", "epoch=3b"]:
         (root / name).mkdir()
-    assert _epochs(str(root)) == [0, 2, 10]
-    assert _epochs(str(tmp_path / "absent")) == []
+    assert sp.list_epochs(str(root)) == [0, 2, 10]
+    assert sp.list_epochs(str(tmp_path / "absent")) == []
 
-    def tags(before):
-        st = _epoch_state(spark, str(root), schema, before=before)
-        return [r.tag for r in st.collect()]
+    def tags(df):
+        return sorted(r.tag for r in df.collect())
 
-    assert tags(10) == [2]
-    assert tags(3) == [2]
-    assert tags(None) == [10]
-    empty = _epoch_state(spark, str(root), schema, before=0)
+    assert tags(sp.read_epochs(spark, str(root))) == [0, 2, 10]
+    assert tags(sp.read_epochs(spark, str(root), before=10)) == [0, 2]
+    assert tags(sp.read_epochs(spark, str(root), before=1)) == [0]
+    with pytest.raises(FileNotFoundError):
+        sp.read_epochs(spark, str(root), before=0)
+
+    def last(before):
+        return tags(sp.read_last_epoch(spark, str(root), schema, before))
+
+    assert last(10) == [2]
+    assert last(3) == [2]
+    assert last(None) == [10]
+    empty = sp.read_last_epoch(spark, str(root), schema, before=0)
     assert empty.dtypes == [("tag", "bigint"), ("note", "string")]
     assert empty.collect() == []
-    absent = _epoch_state(spark, str(tmp_path / "absent"), schema)
+    absent = sp.read_last_epoch(spark, str(tmp_path / "absent"), schema)
     assert absent.dtypes == empty.dtypes and absent.collect() == []
+
+    # a mixed-type sink, with an empty partial, reads back exactly as
+    # the glob read that infers its schema from the footers
+    mixed = spark.range(4).select(
+        "id",
+        F.timestamp_seconds(F.col("id") * 3600).alias("ts"),
+        F.array("id", F.col("id") + 1).alias("arr"),
+        F.struct(F.col("id").alias("a"), F.lit("x").alias("b")).alias("st"),
+        (F.col("id") / 3).cast("decimal(18,4)").alias("dec"),
+        F.lit(None).cast("string").alias("nul"),
+    )
+    mroot = str(tmp_path / "mixed")
+    sp.write_epoch(mixed.filter("id < 2"), mroot, 0)
+    sp.write_epoch(mixed.filter("id >= 2"), mroot, 1)
+    sp.write_epoch(mixed.filter("id < 0"), mroot, 2)
+    got = sp.read_epochs(spark, mroot)
+    ref = spark.read.parquet(os.path.join(mroot, "epoch=*"))
+    assert got.schema == ref.schema
+    assert sorted(got.collect()) == sorted(ref.collect())
+    assert len(got.collect()) == 4
+
+    sc = spark.sparkContext
+    sc.setJobGroup("epoch_reads", "epoch_reads")
+    try:
+        sp.read_epochs(spark, mroot)
+        sp.read_last_epoch(spark, str(root), schema)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("epoch_reads")) == []
 
 
 def test_drain_one_committed_file_per_batch_then_nothing(spark, tmp_path):
@@ -243,30 +281,39 @@ def test_drain_one_committed_file_per_batch_then_nothing(spark, tmp_path):
 def test_drain_policy_lives_in_pipeline():
     """Grep gate: the streaming corpus keeps no stream scaffolding of
     its own (no foreachBatch wiring, trigger, wait or hand-built temp
-    path outside ``_scratch``), and nothing in the package sets a
-    trigger outside streaming/pipeline.py."""
-    import inspect
-
+    path), neither it nor streaming/stateful.py spells an epoch-sink
+    path or glob (streaming/pipeline.py owns the layout), and nothing
+    in the package sets a trigger outside streaming/pipeline.py."""
     from eco_pulse_lakehouse_spark.corpus import streaming_corpus as sc
+    from eco_pulse_lakehouse_spark.streaming import stateful
 
     pkg = os.path.dirname(os.path.dirname(os.path.abspath(sp.__file__)))
-    corpus_path = os.path.abspath(sc.__file__)
-    lines, start = inspect.getsourcelines(sc._scratch)
-    scratch_lines = range(start, start + len(lines))
+    sink_tokens = (
+        "batch={",
+        "epoch={",
+        "batch=*",
+        "epoch=*",
+        'startswith("batch=")',
+    )
+    scaffold_tokens = (
+        ".foreachBatch(",
+        ".trigger(",
+        "awaitTermination(",
+        "tempfile.gettempdir(",
+    )
     offenders = []
-    with open(corpus_path, encoding="utf-8") as fh:
-        for n, line in enumerate(fh, 1):
-            for token in (
-                ".foreachBatch(",
-                ".trigger(",
-                "awaitTermination(",
-                "tempfile.gettempdir(",
-            ):
-                if token not in line:
-                    continue
-                if token == "tempfile.gettempdir(" and n in scratch_lines:
-                    continue
-                offenders.append(f"streaming_corpus.py:{n} {token}")
+    for mod, tokens in (
+        (sc, scaffold_tokens + sink_tokens),
+        (stateful, sink_tokens),
+    ):
+        path = os.path.abspath(mod.__file__)
+        with open(path, encoding="utf-8") as fh:
+            for n, line in enumerate(fh, 1):
+                offenders += [
+                    f"{os.path.basename(path)}:{n} {t}"
+                    for t in tokens
+                    if t in line
+                ]
     for root, _, files in os.walk(pkg):
         for name in files:
             path = os.path.join(root, name)
@@ -279,6 +326,38 @@ def test_drain_policy_lives_in_pipeline():
                     if ".trigger(" in line:
                         offenders.append(f"{os.path.relpath(path, pkg)}:{n}")
     assert not offenders, offenders
+
+
+def test_scratch_root_removed_at_exit(tmp_path):
+    """Uuid scratch paths (corpus/_registry.py:scratch) live under one
+    per-process root that is gone once the interpreter exits, files
+    and all; a keyed path stays at ``<tempdir>/eco_pulse_<tag>_<key>``
+    so per-scale-factor tables are still reused across processes.
+    Runs in a fresh interpreter, with no Spark session."""
+    import subprocess
+    import sys
+
+    code = (
+        "import os\n"
+        "from eco_pulse_lakehouse_spark.corpus._registry import scratch\n"
+        "p = scratch('probe')\n"
+        "os.makedirs(p)\n"
+        "open(os.path.join(p, 'part'), 'w').write('x')\n"
+        "print(os.path.dirname(p), scratch('probe', 'sf0.001'))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        env=dict(os.environ, TMPDIR=str(tmp_path)),
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    root, keyed = out.stdout.split()
+    assert os.path.dirname(root) == str(tmp_path)
+    assert not os.path.exists(root)
+    assert keyed == str(tmp_path / "eco_pulse_probe_sf0.001")
 
 
 def test_stream_dsir_equals_batch(spark):

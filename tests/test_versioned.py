@@ -5,18 +5,15 @@ stand-in; delta-spark absent from the image)."""
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import functions as F
 
+from eco_pulse_lakehouse_spark.corpus._registry import scratch
 from eco_pulse_lakehouse_spark.sources import versioned
 
 
 def _tmp():
-    return os.path.join(
-        tempfile.gettempdir(), f"eco_pulse_vt_{uuid.uuid4().hex}"
-    )
+    return scratch("vt")
 
 
 def test_versions_commit_and_time_travel(spark):
