@@ -5,7 +5,7 @@ Runs the flagship pipeline plus representative corpus queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS], 1 untimed warm-up + 5 timed runs per
 query, full materialization through the noop sink (no driver
-collect). Cache hygiene between entries: every localCheckpoint pin /
+collect). Cache hygiene between entries: every pin (session.pin) /
 cached table a query created is released before the next one is
 timed (release_cached_state — VERDICT r11 item 1).
 
@@ -189,13 +189,14 @@ def materialize(df) -> None:
 def release_cached_state(spark) -> None:
     """Between-query cache hygiene (VERDICT r11 item 1).
 
-    Corpus operators pin shared builds with localCheckpoint
-    (eager=True); a real cluster job releases the pins when the job
-    ends, but bench's long-lived local JVM accumulated them across
+    Corpus operators pin shared builds through
+    ``eco_pulse_lakehouse_spark.session.pin``, whose docstring holds
+    the pin contract; a real cluster job releases the pins when the
+    job ends, but bench's long-lived local JVM accumulated them across
     6 runs x 60 headline queries — storage pressure landing exactly
     on the late-order entries (the r11 a29/nb_lang_id/budget_select
-    inflation). Unpersist every persistent RDD (the localCheckpoint
-    blocks) and drop the table cache after each entry. Safe because
+    inflation). Unpersist every persistent RDD (the pinned blocks)
+    and drop the table cache after each entry. Safe because
     no corpus fn memoizes a pinned frame across calls (grep-audited
     r12): every call rebuilds its pins from the parquet sources.
 

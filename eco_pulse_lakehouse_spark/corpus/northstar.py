@@ -17,6 +17,7 @@ from eco_pulse_lakehouse_spark.functions import text as xt
 from eco_pulse_lakehouse_spark.operators import dedup as xd
 from eco_pulse_lakehouse_spark.operators import multimodal as xm
 from eco_pulse_lakehouse_spark.operators import similarity as xs
+from eco_pulse_lakehouse_spark.session import pin
 
 QUERIES, ORACLES, q = make_registry()
 
@@ -2123,9 +2124,7 @@ def x4_rrf_fusion(spark, sf_dir):
     # term_postings (retrieval.py:249), so the fusion input — and
     # the oracle-checked output — is unchanged row for row.
     q_terms = query_terms(spark, _BM25_QUERIES)
-    postings = term_postings(d, "doc_id", "text").localCheckpoint(
-        eager=True
-    )
+    postings = pin(term_postings(d, "doc_id", "text"))
     dl, df_t, stats = bm25_shared_stats(postings, "doc_id")
     a = bm25_from_postings(
         postings, "doc_id", q_terms, 1.2, 0.75, 20,

@@ -40,7 +40,7 @@ from eco_pulse_lakehouse_spark.corpus import northstar as _ns
 from eco_pulse_lakehouse_spark.corpus import relational as _rel
 from eco_pulse_lakehouse_spark.corpus._registry import T, make_registry
 from eco_pulse_lakehouse_spark.corpus._registry import scratch as _scratch
-from eco_pulse_lakehouse_spark.session import local_frame
+from eco_pulse_lakehouse_spark.session import local_frame, pin
 from eco_pulse_lakehouse_spark.streaming import pipeline as sp
 
 QUERIES, ORACLES, q = make_registry()
@@ -946,7 +946,7 @@ def t20_stream_versioned_gold(spark, sf_dir):
                 )
             )
             # pin the plan before the new version write begins
-            combined = combined.localCheckpoint(eager=True)
+            combined = pin(combined)
         else:
             combined = agg
         versioned.write_version(combined, gold, meta={"batch_id": batch_id})
@@ -1358,7 +1358,7 @@ def t25_stream_semdedup(spark, sf_dir):
         scored_b = semdedup_assign(
             bq, coarse, "vec_id", "q_vec", 16, 64
         ).select("vec_id", "q_vec", "cluster_id", "__cdot")
-        scored_b = scored_b.localCheckpoint(eager=True)
+        scored_b = pin(scored_b)
         all_scored = scored_b
         if batch_id:  # batches 0..batch_id-1 each landed a partial
             all_scored = all_scored.unionByName(
@@ -2557,7 +2557,7 @@ def t42_stream_gold_topk(spark, sf_dir):
     )
 
     fires, stations = _gold_event_sides(spark, sf_dir)
-    stations = stations.localCheckpoint(eager=True)  # static dim, pinned
+    stations = pin(stations)  # static dim
 
     stage = _scratch("t42")
     fires.repartition(4).write.mode("overwrite").parquet(stage)
@@ -2611,7 +2611,7 @@ def t43_stream_rag_context(spark, sf_dir):
 
     emb = T(spark, sf_dir, "embeddings")
     docs = T(spark, sf_dir, "documents")
-    store = int8_store(emb).localCheckpoint(eager=True)  # pinned
+    store = pin(int8_store(emb))
 
     queries_df = emb.filter(F.col("vec_id") < 5).select(
         "vec_id", "embedding"
@@ -2675,9 +2675,9 @@ def t45_stream_decontaminate(spark, sf_dir):
         F.col("doc_id").cast("bigint").alias("doc_id"), "text"
     )
     u = unit_hash(F.col("doc_id"))
-    ev = eval_shingle_set(
-        d.filter(u >= 0.9), "doc_id", "text", shingle_n=4
-    ).localCheckpoint(eager=True)  # the pinned per-benchmark artifact
+    ev = pin(  # the per-benchmark artifact
+        eval_shingle_set(d.filter(u >= 0.9), "doc_id", "text", shingle_n=4)
+    )
     train = d.filter(u < 0.9)
 
     stage = _scratch("t45")
@@ -3098,9 +3098,7 @@ def t47_stream_search_serving(spark, sf_dir):
     d = T(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "text"
     )
-    store = term_postings(d, "doc_id", "text").localCheckpoint(
-        eager=True
-    )  # the pinned index artifact
+    store = pin(term_postings(d, "doc_id", "text"))  # the index artifact
     # maintained stats triple next to the store (r14, ADVICE r13):
     # without it every request batch re-pinned dl/df_t — leaked
     # blocks + 2 eager jobs per batch in a long-lived serving loop
@@ -3233,10 +3231,8 @@ def t49_stream_hybrid_serving(spark, sf_dir):
         F.col("doc_id").cast("bigint").alias("doc_id"), "text"
     )
     e = T(spark, sf_dir, "embeddings")
-    postings = term_postings(d, "doc_id", "text").localCheckpoint(
-        eager=True
-    )  # pinned keyword index
-    store = int8_store(e).localCheckpoint(eager=True)  # pinned vectors
+    postings = pin(term_postings(d, "doc_id", "text"))  # keyword index
+    store = pin(int8_store(e))  # vectors
     # the (dl, df_t, stats) triple is maintained ONCE next to the
     # postings store and passed per request batch (r14, ADVICE r13):
     # the per-batch serve otherwise re-pinned dl/df_t every batch —
@@ -3479,9 +3475,9 @@ def t52_stream_hybrid_loop(spark, sf_dir):
 
     # --- serving stream over the two MERGED maintained artifacts ---
     # pinned for the request loop (the t49 discipline: many request
-    # batches, one materialization; persist() on a real cluster)
-    postings = sp.read_epochs(spark, d_sink).localCheckpoint(eager=True)
-    store = sp.read_epochs(spark, e_sink).localCheckpoint(eager=True)
+    # batches, one materialization)
+    postings = pin(sp.read_epochs(spark, d_sink))
+    store = pin(sp.read_epochs(spark, e_sink))
     # maintained stats triple next to the merged postings (r14,
     # ADVICE r13): computed once for the whole request loop instead
     # of re-pinned per batch

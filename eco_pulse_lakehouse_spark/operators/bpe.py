@@ -26,9 +26,9 @@ touches only the vocabulary:
                 verbatim by the DuckDB oracle via list_reduce with a
                 LIST accumulator.
 
-Each round's segmentation is pinned with localCheckpoint (persist on
-a real cluster — operators/rank.py note) so round r does not recompute
-rounds 1..r-1's folds, exactly the components.py loop discipline.
+Each round's segmentation is pinned (``session.pin``) so round r does
+not recompute rounds 1..r-1's folds, exactly the components.py loop
+discipline.
 
 Determinism: pair counts are exact BIGINTs; the argmax tiebreak is
 (count desc, left asc, right asc) over ASCII symbols, identical under
@@ -44,7 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from eco_pulse_lakehouse_spark.functions.text import tokens
-from eco_pulse_lakehouse_spark.session import local_frame
+from eco_pulse_lakehouse_spark.session import local_frame, pin
 
 
 def _empty_str_array() -> Column:
@@ -133,7 +133,7 @@ def learn_bpe_merges_from_vocab(
             F.col(f_col).alias("f"),
             _char_segmentation(F.col(w_col)).alias("seg"),
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     learned: list[tuple[int, str, str, int]] = []
     for merge_round in range(1, n_merges + 1):
@@ -159,7 +159,7 @@ def learn_bpe_merges_from_vocab(
         )
         seg = seg.withColumn(
             "seg", apply_merge(F.col("seg"), b.left_sym, b.right_sym)
-        ).localCheckpoint(eager=True)
+        ).transform(pin)
     return local_frame(
         spark,
         learned,
@@ -220,7 +220,7 @@ def learn_wordpiece_merges_from_vocab(
 ) -> DataFrame:
     """WordPiece loop over a pre-built (word, frequency) table — see
     :func:`learn_wordpiece_merges`. Shares the BPE loop discipline:
-    localCheckpoint pins each round's segmentation so round r never
+    each round's segmentation is pinned so round r never
     recomputes rounds 1..r−1's folds."""
     spark = words.sparkSession
     seg = (
@@ -228,7 +228,7 @@ def learn_wordpiece_merges_from_vocab(
             F.col(f_col).alias("f"),
             _char_segmentation(F.col(w_col)).alias("seg"),
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     learned: list[tuple[int, str, str, int, int]] = []
     for merge_round in range(1, n_merges + 1):
@@ -306,7 +306,7 @@ def learn_wordpiece_merges_from_vocab(
         )
         seg = seg.withColumn(
             "seg", apply_merge(F.col("seg"), b.left_sym, b.right_sym)
-        ).localCheckpoint(eager=True)
+        ).transform(pin)
     return local_frame(
         spark,
         learned,

@@ -21,12 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from eco_pulse_lakehouse_spark.session import pin
+
 
 def _pin_round(df: DataFrame) -> DataFrame:
-    """localCheckpoint for ITERATIVE-LOOP state, with the origin
-    plan's statistics stripped.
+    """:func:`~eco_pulse_lakehouse_spark.session.pin` for
+    ITERATIVE-LOOP state, with the origin plan's statistics stripped.
 
-    Spark's Dataset.localCheckpoint carries the optimized plan's
+    Spark's Dataset.localCheckpoint (the pin) carries the optimized plan's
     stats into the resulting LogicalRDD (normally desirable — it
     keeps broadcast decisions working downstream). Inside a loop
     whose round plan joins the previous round's state with ITSELF
@@ -47,13 +49,13 @@ def _pin_round(df: DataFrame) -> DataFrame:
     from the last round's rebuilt state, so they too report the
     default sizeInBytes (measured: constant 63-bit default vs the
     plain form's 20→2431-bit doubling over 8 rounds; a plain
-    localCheckpoint of the converged labels inherits the same
+    pin of the converged labels inherits the same
     default, so it would not help). That costs no real capability —
     the pre-fix labels carried the astronomically compounded stats,
     so auto-broadcast downstream never fired either way. Callers
     that KNOW their label table is small (e.g. a bounded pair graph)
     should wrap it in ``F.broadcast`` explicitly before joining."""
-    df = df.localCheckpoint(eager=True)
+    df = pin(df)
     spark = df.sparkSession
     try:
         jdf = df._jdf
@@ -94,7 +96,7 @@ def connected_components(
     component min in O(log diameter) rounds instead of O(diameter),
     which is what keeps a 20-round bound safe for any graph this
     corpus (or a 100 TB pair stream) can produce. Each round
-    materializes ONCE via localCheckpoint and the convergence count
+    materializes ONCE via a pin and the convergence count
     then scans the checkpointed rows (the pre-r07 order ran the
     round's join pipeline twice — once for the count, once for the
     checkpoint). Labels are monotonically non-increasing so
@@ -116,9 +118,8 @@ def connected_components(
         # label build — re-executes that whole plan (measured: the
         # x2_dedup_clusters one-off is ~10 s of pair generation and
         # ~1.5 s of actual propagation, so the unpinned loop tripled
-        # the cost). persist/checkpoint on a real cluster;
-        # localCheckpoint is the local-mode stand-in (rank.py note).
-        .localCheckpoint(eager=True)
+        # the cost).
+        .transform(pin)
     )
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "comp", F.col("id")
@@ -308,13 +309,13 @@ def pagerank(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     nodes = (
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     degree = e.groupBy("src").agg(F.count("*").alias("out_deg"))
     ranks = nodes.withColumn("rank", F.lit(1.0))
@@ -348,7 +349,7 @@ def pagerank(
         )
         # pin each iteration's ranks so iteration i+1's plan starts
         # from materialized rows instead of nesting i's whole tree
-        ranks = ranks.localCheckpoint(eager=True)
+        ranks = pin(ranks)
     return ranks
 
 

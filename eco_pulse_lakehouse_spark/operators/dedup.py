@@ -21,41 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from eco_pulse_lakehouse_spark.functions.text import word_shingles
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Shared-build pin for multi-consumer subtrees (minhash band
-    table, shingle tables, winnowing fingerprint indexes).
-
-    Pin contract — callers should know three things (ADVICE r11):
-
-    1. COST AT CONSTRUCTION, not at action: ``localCheckpoint
-       (eager=True)`` runs the pinned subtree's full job the moment
-       the operator function is CALLED, even if the caller only
-       inspects ``.explain()`` or applies further filters (which can
-       no longer push below the pin — the pinned frame is already
-       the right granularity for every shipped consumer).
-    2. NO AUTO-RELEASE: the blocks live until the session ends or
-       someone unpersists them. One-shot jobs don't care (the pin
-       dies with the job — the 100 TB posture); a LONG-LIVED session
-       calling pinned operators repeatedly must release between
-       calls: unpersist every persistent RDD via
-       ``spark.sparkContext._jsc.getPersistentRDDs()`` (see
-       bench.release_cached_state — the r11 bench inflation was
-       exactly this accumulation). Recompute of an unpersisted
-       localCheckpoint FAILS by design, so release only after the
-       consuming action finishes and the frame is dropped.
-    3. ON A REAL CLUSTER use ``persist(StorageLevel.MEMORY_AND_DISK)``
-       (+ checkpoint for lineage breaks): localCheckpoint blocks die
-       with an executor; local-mode has one executor, so here it is
-       the cheap exact stand-in.
-
-    When to pin at all: only when the shared subtree contains its own
-    shuffle or an interpreted explode pipeline — pinning a cheap
-    codegen'd map-only projection measured SLOWER (simhash probe,
-    SCALE.md r11 rule).
-    """
-    return df.localCheckpoint(eager=True)
+from eco_pulse_lakehouse_spark.session import pin
 
 
 # --- exact ----------------------------------------------------------------
@@ -274,11 +240,10 @@ def minhash_lsh_pairs(
     # different aliases BELOW the exchange, so Spark does not plan a
     # ReusedExchange and the whole shingle→signature→band pipeline
     # ran twice unpinned (measured 2.13 → 1.75 s at sf0.1, identical
-    # output — the shared-build pin discipline; persist() on a real
-    # cluster).
+    # output — the shared-build pin discipline).
     banded = minhash_bands(
         docs, id_col, text_col, num_hashes, bands, shingle_n, token_hash
-    ).transform(_pin)
+    ).transform(pin)
 
     a = banded.select(F.col(id_col).alias("id_a"), "band", "bh")
     b_ = banded.select(F.col(id_col).alias("id_b"), "band", "bh")
@@ -415,15 +380,14 @@ def _shingle_pair_counts(
     pairs sharing zero shingles never materialize.
 
     The shingle table is PINNED before fanning out (the
-    bounded_winnowing/PPJoin/postings discipline; persist() on a
-    real cluster): three subplans consume it — the inverted-index
+    bounded_winnowing/PPJoin/postings discipline): three subplans consume it — the inverted-index
     explode and both per-doc size lookups — and each re-tokenized +
     re-shingled the corpus unpinned. Measured at sf0.1 (cold noop
     medians): 10.9 s → 3.8 s, identical output."""
     sh = docs.select(
         F.col(id_col).alias("__id"),
         F.array_distinct(word_shingles(F.col(text_col), shingle_n)).alias("sh"),
-    ).transform(_pin)
+    ).transform(pin)
     sizes = sh.select("__id", F.size("sh").alias("__sz"))
     inv = sh.select("__id", F.explode("sh").alias("__s"))
     a = inv.select(F.col("__id").alias("id_a"), "__s")
@@ -870,7 +834,7 @@ def winnowing_pairs(
     # measured 4.5 → 2.8 s at sf0.1, identical output).
     fp = winnowing_fingerprints(
         docs, id_col, text_col, k, w, token_hash
-    ).transform(_pin)
+    ).transform(pin)
     a = fp.select(F.col(id_col).alias("id_a"), "fp")
     b = fp.select(F.col(id_col).alias("id_b"), "fp")
     return (
@@ -915,11 +879,10 @@ def bounded_winnowing_pairs(
     # Pin the fingerprint index before fanning out: three subplans
     # consume it (hot aggregation, left_anti cold pass, left_semi hot
     # pass) and would each recompute the tokenize + gram-hash +
-    # explode pipeline otherwise (the postings/dbc pin discipline;
-    # persist() on a real cluster).
+    # explode pipeline otherwise (the postings/dbc pin discipline).
     fp = winnowing_fingerprints(
         docs, id_col, text_col, k, w, token_hash
-    ).transform(_pin)
+    ).transform(pin)
     hot = (
         fp.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -1371,15 +1334,14 @@ def prefix_filter_jaccard_pairs(
     # Pin the shingle table before fanning out: THREE subplans
     # consume it (the index explode + both verification id lookups)
     # and would each re-tokenize + re-shingle the corpus otherwise
-    # (the bounded_winnowing/postings pin discipline; persist() on a
-    # real cluster). Measured at sf0.1: 11.7 s → 5.0 s, identical
-    # output.
+    # (the bounded_winnowing/postings pin discipline). Measured at
+    # sf0.1: 11.7 s → 5.0 s, identical output.
     sh = docs.select(
         F.col(id_col).alias("__id"),
         F.array_distinct(
             word_shingles(F.col(text_col), shingle_n)
         ).alias("sh"),
-    ).transform(_pin)
+    ).transform(pin)
     ex = sh.select("__id", F.explode("sh").alias("__s"))
     df_tab = ex.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
     # per-doc shingles with their global order key, re-packed and

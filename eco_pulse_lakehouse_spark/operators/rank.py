@@ -30,7 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from eco_pulse_lakehouse_spark.session import local_frame
+from eco_pulse_lakehouse_spark.session import local_frame, pin
 
 _PID = "__pid"
 _LOCAL = "__local_rn"
@@ -56,8 +56,8 @@ def global_row_number(
     )
     # repartitionByRange SAMPLES boundaries per execution — the counts
     # pass and the ranking pass must see the SAME partitioning, so pin
-    # the partitioned data (persist on a cluster; localCheckpoint here).
-    ranged = ranged.localCheckpoint(eager=True)
+    # the partitioned data.
+    ranged = pin(ranged)
     # one long per partition to the driver — O(partitions), not O(rows)
     counts = {
         r[_PID]: r["cnt"]
@@ -104,7 +104,7 @@ def global_running_sum(
     ranged = df.repartitionByRange(int(n), *order_by).withColumn(
         _PID, F.spark_partition_id()
     )
-    ranged = ranged.localCheckpoint(eager=True)
+    ranged = pin(ranged)
     totals = (
         ranged.groupBy(_PID)
         .agg(*[F.sum(c).cast("long").alias(c) for c in sum_cols])

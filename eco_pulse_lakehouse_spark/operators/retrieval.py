@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from eco_pulse_lakehouse_spark import session
 from eco_pulse_lakehouse_spark.functions.text import tokens
 from eco_pulse_lakehouse_spark.session import local_frame
 
@@ -151,7 +152,6 @@ def _bm25_score(
     k1: float,
     b: float,
     k: int,
-    pin: bool = True,
 ) -> DataFrame:
     """Shared BM25 scoring core over a (query_id, term) DataFrame.
     Fixed-point contributions — see :func:`bm25_topk` for the
@@ -163,14 +163,8 @@ def _bm25_score(
     groupBy re-ran once per consumer — dl, df_t and the contribution
     join each re-tokenized the corpus (4 text scans in the x4_bm25
     before plan); the shared lazy (dl, df_t, stats) triple then
-    derives from the one pin. ``pin=False`` (r14, ADVICE r13) is the
-    escape hatch for plan-inspection and long-lived-session callers:
-    the eager localCheckpoint otherwise runs the full tokenize +
-    shuffle job at DataFrame-CONSTRUCTION time and its blocks are
-    never auto-released (the dedup pin contract)."""
-    postings = term_postings(docs, id_col, text_col)
-    if pin:
-        postings = postings.localCheckpoint(eager=True)
+    derives from the one pin."""
+    postings = session.pin(term_postings(docs, id_col, text_col))
     dl, df_t, stats = bm25_shared_stats(postings, id_col, pin=False)
     return bm25_from_postings(
         postings, id_col, q_terms, k1, b, k, dl=dl, df_t=df_t, stats=stats
@@ -185,9 +179,9 @@ def bm25_shared_stats(
     PRF serving DAG aggregates the full postings table for per-doc
     lengths and per-term document frequencies in the feedback pass,
     again in the final pass, and a third time for budget token
-    counts — each a full-postings shuffle. ``pin=True``
-    localCheckpoints the doc-sized ``dl`` and vocab-sized ``df_t``
-    (persist() on a real cluster — both are index-sized artifacts a
+    counts — each a full-postings shuffle. ``pin=True`` pins
+    (:func:`~eco_pulse_lakehouse_spark.session.pin`) the doc-sized
+    ``dl`` and vocab-sized ``df_t`` (both are index-sized artifacts a
     serving platform maintains next to the postings themselves);
     ``stats`` is a 1-row aggregate over ``dl`` and stays lazy.
     Expressions are exactly the per-call forms, so scores are
@@ -197,8 +191,8 @@ def bm25_shared_stats(
         F.count(F.lit(1)).cast("double").alias("df")
     )
     if pin:
-        dl = dl.localCheckpoint(eager=True)
-        df_t = df_t.localCheckpoint(eager=True)
+        dl = session.pin(dl)
+        df_t = session.pin(df_t)
     stats = dl.agg(
         F.count(F.lit(1)).cast("double").alias("__n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")).alias(
@@ -469,13 +463,11 @@ def bm25_prf_topk(
 
     The postings table feeds ~7 plan consumers across the two passes
     (dl/df/contrib twice + the feedback join); without pinning, each
-    re-derives it from the text scan. localCheckpoint pins it once
+    re-derives it from the text scan. One pin builds it once
     (the curation-flagship shared-featurize precedent — measured
-    25-30% at sf0.1; persist() on a real cluster)."""
+    25-30% at sf0.1)."""
     q_terms = query_terms(docs.sparkSession, queries)
-    postings = term_postings(docs, id_col, text_col).localCheckpoint(
-        eager=True
-    )
+    postings = session.pin(term_postings(docs, id_col, text_col))
     # dl/df_t/stats once for BOTH passes (r13, guide §2.4): the
     # feedback pass and the final pass each re-aggregated the full
     # postings pin for per-doc lengths and document frequencies.
@@ -896,7 +888,6 @@ def unigram_logprob_score(
     order, and one final division + 6dp round yields the score —
     oracle-exact (x4_unigram_logprob)."""
     from eco_pulse_lakehouse_spark.functions.text import tokens
-    from eco_pulse_lakehouse_spark.operators.dedup import _pin
 
     # ONE tokenize pass (r14, guide §2.4): the old form exploded the
     # token stream twice — once to build the LM counts, once for the
@@ -905,8 +896,7 @@ def unigram_logprob_score(
     # the per-document sums are Σ k·s_fp — exact integer sums, so
     # results are bit-identical to the per-token form (and the table
     # is distinct-words-per-doc sized, smaller than the raw stream).
-    # persist() replaces localCheckpoint on a real cluster.
-    twc = _pin(
+    twc = session.pin(
         docs.select(
             F.col(id_col), F.explode(tokens(F.col(text_col))).alias("__w")
         )

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 
 from eco_pulse_lakehouse_spark.functions.text import tokens, word_shingles
 from eco_pulse_lakehouse_spark.operators.dedup import poly_token_hash
+from eco_pulse_lakehouse_spark.session import pin
 
 FP_SCALE = 1_000_000
 
@@ -148,11 +149,8 @@ def dsir_weights(
     document. All integer sums, so results are bit-identical to the
     two-pass form (Σ_bucket n·w_fp ≡ Σ_features w_fp); the
     interpreted per-character hash folds — the measured hot stage —
-    run once per token instead of twice. persist() replaces
-    localCheckpoint on a real cluster (the dedup pin contract)."""
-    from eco_pulse_lakehouse_spark.operators.dedup import _pin
-
-    dbc = _pin(
+    run once per token instead of twice."""
+    dbc = pin(
         docs.select(
             F.col(id_col),
             target_pred.alias("__is_t"),
@@ -532,11 +530,9 @@ def nb_classify(
         # the class counts (Σn by bucket and label) and the
         # per-document sums (Σ n·w_fp) — exact integer sums, results
         # bit-identical to the two-pass form (the plans/curation.py
-        # artifact; persist() replaces localCheckpoint on a cluster).
-        from eco_pulse_lakehouse_spark.operators.dedup import _pin
-
+        # artifact).
         spark = docs.sparkSession
-        dbc = _pin(
+        dbc = pin(
             docs.select(
                 F.col(id_col),
                 label_pred.alias("__is_p"),
@@ -630,11 +626,9 @@ def nb_multiclass_classify(
     # now feeds BOTH the class×bucket counts (Σn over train rows) and
     # the per-(doc, class) scores (Σ n·w_fp) — exact integer sums,
     # bit-identical to the two-pass form (the plans/curation.py
-    # artifact; persist() replaces localCheckpoint on a cluster).
-    from eco_pulse_lakehouse_spark.operators.dedup import _pin
-
+    # artifact).
     tr_flag = train_pred if train_pred is not None else F.lit(True)
-    dbc = _pin(
+    dbc = pin(
         docs.select(
             F.col(id_col),
             F.col(label_col).alias("__lbl"),

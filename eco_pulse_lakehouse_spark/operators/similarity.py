@@ -26,6 +26,7 @@ from eco_pulse_lakehouse_spark.functions.vector import (
     dot,
     norm2,
 )
+from eco_pulse_lakehouse_spark.session import pin
 
 
 def cosine_topk_bruteforce(
@@ -440,7 +441,7 @@ def kmeans_centroids(
         # (recompute + empty-cluster carry), so the unpinned lazy
         # plan doubles each iteration (2^iterations subtrees). The
         # table is k rows — pinning is free.
-        cents = cents.localCheckpoint(eager=True)
+        cents = pin(cents)
     return cents
 
 
@@ -1623,10 +1624,9 @@ def semantic_dedup(
     # encode + centroid-dot projection (interpreted HOF dots) re-ran
     # per consumer (the before plan re-scanned the embeddings 18x).
     # Measured 2.29 -> 2.04 s at sf0.1, identical survivors.
-    # persist() on a real cluster.
-    scored = semdedup_assign(
-        quantized, coarse, id_col, vec_col, n_clusters, dim
-    ).localCheckpoint(eager=True)
+    scored = pin(
+        semdedup_assign(quantized, coarse, id_col, vec_col, n_clusters, dim)
+    )
     drops = semdedup_drops(
         scored, scored, id_col, vec_col, min_dot, ordered_pairs=True
     )
@@ -1946,7 +1946,7 @@ def mmr_rerank(
     driver-side plan compositions (no collects); each round is one
     per-query max + one per-query ranking window over ≤ k_pool rows
     per query — high-cardinality query partitions, never a global
-    sort. Pool and pair tables are pinned (persist on a cluster).
+    sort. Pool and pair tables are pinned.
     Returns (q_id, c_id, mmr_rank, rel_fp, score_fp).
 
     Composition hooks (the flagship_rag_context path): ``pool`` — a
@@ -1969,12 +1969,10 @@ def mmr_rerank(
                 F.round(F.col("sim") * 1_000_000, 0).cast("bigint"),
             )
             .select(q_id, c_id, "rel_fp")
-            .localCheckpoint(eager=True)
+            .transform(pin)
         )
     else:
-        pool = pool.select(q_id, c_id, "rel_fp").localCheckpoint(
-            eager=True
-        )
+        pool = pin(pool.select(q_id, c_id, "rel_fp"))
     cv = candidates.select(c_id, c_vec)
     a = (
         pool.select(q_id, F.col(c_id).alias("__ia"))
@@ -2011,7 +2009,7 @@ def mmr_rerank(
             .cast("bigint")
             .alias("__sim_fp"),
         )
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     mu = int(lam_den - lam_num)
     selected: DataFrame | None = None
@@ -2053,7 +2051,7 @@ def mmr_rerank(
                 "rel_fp",
                 "score_fp",
             )
-            .localCheckpoint(eager=True)
+            .transform(pin)
         )
         selected = pick if selected is None else selected.unionByName(pick)
         remaining = remaining.join(

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from eco_pulse_lakehouse_spark.session import pin
+
 
 def gap_fill_daily(
     events: DataFrame,
@@ -259,12 +261,8 @@ def sax_motif_pairs(
     # join sides consume it, and unpinned each re-ran the whole
     # collect_list -> explode -> z-normalize pipeline (the before
     # plan's duplicated subtrees 1-8 / 9-16,
-    # plans/r13/w16_sax_motif_pairs_before.txt). The dedup-module
-    # pin contract applies (localCheckpoint here; persist() on a
-    # real cluster); release via the caller's usual pin hygiene.
-    from eco_pulse_lakehouse_spark.operators.dedup import _pin
-
-    sax = _pin(sax)
+    # plans/r13/w16_sax_motif_pairs_before.txt).
+    sax = pin(sax)
     a = sax.select(
         F.col(key_col).alias("key_a"),
         F.col("win_start").alias("start_a"),

@@ -55,6 +55,7 @@ from eco_pulse_lakehouse_spark.operators.selection import (
     _hashed_features,
     ratio_table,
 )
+from eco_pulse_lakehouse_spark.session import pin
 
 
 def curation_select(
@@ -78,16 +79,15 @@ def curation_select(
     (nb_classify / dsir_weights — pinned in tests). Naively
     composing the operators re-featurized the corpus three times:
     measured 8.4 s naive vs 5.2-6.3 s shared-featurize at sf0.1
-    (raw layout). persist() replaces localCheckpoint on a
-    cluster."""
+    (raw layout)."""
     is_pos = F.col("source").isin("src0", "src1", "src2", "src3", "src4")
     # Pinned (r13): dd feeds BOTH the line-dedup stage and the
     # metadata join below — unpinned, the exact-dedup window (a full
-    # shuffle of the text) ran twice. persist() on a real cluster.
+    # shuffle of the text) ran twice.
     dd = (
         exact_dedup(docs, ["text"], "doc_id")
         .select("doc_id", "lang", "source", "text")
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     ld = line_dedup_keep_first(dd, "doc_id", "text", chunk_tokens)
     # r14 (guide §2.4): doc metadata (lang, provenance label) rides
@@ -115,7 +115,7 @@ def curation_select(
         )
         .groupBy("doc_id", "lang", "__is_p", "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint(eager=True)  # the one featurize pass
+        .transform(pin)  # the one featurize pass
     )
 
     # NB gate: class counts + evidence from the doc-bucket table

@@ -61,6 +61,7 @@ from eco_pulse_lakehouse_spark.operators.selection import (
     _hashed_features,
     ratio_table,
 )
+from eco_pulse_lakehouse_spark.session import pin
 
 
 def data_factory_manifest(
@@ -89,11 +90,11 @@ def data_factory_manifest(
     is_pos = F.col("source").isin("src0", "src1", "src2", "src3", "src4")
     # Pinned (r13, the curation_select fix): dd feeds both the
     # line-dedup stage and the metadata join — unpinned, the
-    # exact-dedup window ran twice. persist() on a real cluster.
+    # exact-dedup window ran twice.
     dd = (
         exact_dedup(docs, ["text"], "doc_id")
         .select("doc_id", "lang", "source", "text")
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     ld = line_dedup_keep_first(dd, "doc_id", "text", chunk_tokens)
     cleaned = (
@@ -101,7 +102,7 @@ def data_factory_manifest(
         .join(ld.select("doc_id", "text_clean"), "doc_id")
         .filter(F.col("text_clean") != "")
         .select("doc_id", "lang", "source", F.col("text_clean").alias("text"))
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
     ppx = perplexity_buckets(cleaned, "doc_id", "text", "lang", n_buckets=3)
     # r14 (guide §2.4, the curation_select rewrite): doc metadata
@@ -125,7 +126,7 @@ def data_factory_manifest(
         )
         .groupBy("doc_id", "lang", "__is_p", "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint(eager=True)  # the one featurize pass
+        .transform(pin)  # the one featurize pass
     )
 
     nb_counts = dbc.groupBy("bucket").agg(

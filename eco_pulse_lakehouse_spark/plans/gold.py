@@ -33,6 +33,7 @@ from eco_pulse_lakehouse_spark.operators.joins import (
     distance_join_naive,
 )
 from eco_pulse_lakehouse_spark.operators.windows import latest_per_key
+from eco_pulse_lakehouse_spark.session import pin
 
 MAX_DISTANCE_DEG = 20.0  # gold_batch_job.py:61
 
@@ -158,7 +159,7 @@ def run_gold_cycle(
         merged = delta
     # Materialize before overwriting the path being read; only the
     # touched partitions' rows are pinned (O(batch partitions)).
-    staged = merged.localCheckpoint(eager=True)
+    staged = pin(merged)
     (
         staged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -290,10 +291,10 @@ def gold_risk_events_topk(
     # latest-per-key window re-ran per consumer (16 scans in the
     # before plan). Measured 3.67 -> 3.32 s at sf0.1, identical rows.
     # The streaming twin (t42) passes its own per-batch sides through
-    # gold_topk_for_fires and is untouched. persist() on a cluster.
+    # gold_topk_for_fires and is untouched.
     fires, stations = _gold_event_sides(spark, sf_dir)
-    fires = fires.localCheckpoint(eager=True)
-    stations = stations.localCheckpoint(eager=True)
+    fires = pin(fires)
+    stations = pin(stations)
     return gold_topk_for_fires(fires, stations, k, narrow_frac)
 
 

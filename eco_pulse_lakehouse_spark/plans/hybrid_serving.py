@@ -53,7 +53,7 @@ from eco_pulse_lakehouse_spark.operators.retrieval import (
     term_postings,
 )
 from eco_pulse_lakehouse_spark.plans.rag_context import int8_store
-from eco_pulse_lakehouse_spark.session import local_frame
+from eco_pulse_lakehouse_spark.session import local_frame, pin
 
 
 def hybrid_serving(
@@ -98,9 +98,7 @@ def hybrid_serving(
     q_terms = query_terms(spark, queries)
     if postings is None:
         # maintained keyword index: PRF + scoring + budget all read it
-        postings = term_postings(docs, id_col, text_col).localCheckpoint(
-            eager=True
-        )
+        postings = pin(term_postings(docs, id_col, text_col))
     if quantized is None:
         # NOT pinned, measured (the SCALE.md pin rule): the store is
         # a map-only quantize+norm projection over the embeddings

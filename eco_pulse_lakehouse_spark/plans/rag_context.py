@@ -77,7 +77,7 @@ def int8_store(
     int8-quantized vectors plus their precomputed norms, the table
     every retrieval/pair stage of :func:`rag_context_mmr` reads.
     Built by one fixed expression tree so a twin that pins it once
-    (localCheckpoint / a maintained table at scale) serves
+    (``session.pin`` / a maintained table at scale) serves
     bit-identically to the one-shot flagship."""
     from eco_pulse_lakehouse_spark.operators.similarity import (
         quantize_embeddings,

@@ -2,7 +2,7 @@
 retrieval platform runs per request batch, composed entirely from
 certified stages:
 
-  postings build (ONE, localCheckpoint-pinned — the maintained index)
+  postings build (ONE, pinned — the maintained index)
   → PRF-expanded BM25 top-20        (retrieval.py:prf_expand_terms)
   → term-overlap top-20              (the rank-divergent 2nd retriever)
   → Reciprocal Rank Fusion           (retrieval.py:rrf_fuse)
@@ -33,6 +33,7 @@ from eco_pulse_lakehouse_spark.operators.retrieval import (
     term_overlap_from_postings,
     term_postings,
 )
+from eco_pulse_lakehouse_spark.session import pin
 
 
 def search_serving(
@@ -64,9 +65,7 @@ def search_serving(
     q_terms = query_terms(docs.sparkSession, queries)
     if postings is None:
         # the maintained index artifact: ~8 plan consumers downstream
-        postings = term_postings(docs, id_col, text_col).localCheckpoint(
-            eager=True
-        )
+        postings = pin(term_postings(docs, id_col, text_col))
     # dl/df_t/stats once for the WHOLE DAG (r13, guide §2.4): the PRF
     # feedback pass, the final BM25 pass and the budget token counts
     # each re-aggregated the full postings pin before this.

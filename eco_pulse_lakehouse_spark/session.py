@@ -85,6 +85,41 @@ def get_session(
     return spark
 
 
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize a shared build once: the package's one pin. The
+    result plans as a ``LogicalRDD`` over the pinned blocks, so its
+    consumers neither rescan the source nor re-run the subtree.
+
+    1. COST AT CONSTRUCTION, not at action: ``localCheckpoint
+       (eager=True)`` runs the pinned subtree's full job the moment
+       ``pin`` is CALLED, even if the caller only inspects
+       ``.explain()`` or applies further filters (which can no longer
+       push below the pin — the pinned frame is already the right
+       granularity for every shipped consumer).
+    2. NO AUTO-RELEASE: the blocks live until the session ends or
+       someone unpersists them. One-shot jobs don't care (the pin
+       dies with the job); a LONG-LIVED session calling pinned
+       operators repeatedly must release between calls through
+       ``bench.release_cached_state``, which unpersists every
+       persistent RDD (the r11 bench inflation was exactly this
+       accumulation). Recompute of an unpersisted pin FAILS by
+       design, so release only after the consuming action finishes
+       and the frame is dropped.
+    3. ON A REAL CLUSTER the posture is
+       ``persist(StorageLevel.MEMORY_AND_DISK)`` (+ checkpoint for
+       lineage breaks): localCheckpoint blocks die with an executor;
+       local mode has one executor, so here it is the cheap exact
+       stand-in.
+
+    When to pin at all (SCALE.md r11 rule): only when the shared
+    subtree contains its own shuffle or an interpreted explode
+    pipeline, or when a loop would otherwise grow its lineage —
+    pinning a cheap codegen'd map-only projection measured SLOWER
+    (simhash probe).
+    """
+    return df.localCheckpoint(eager=True)
+
+
 def local_frame(
     spark: SparkSession, rows: Iterable[tuple], schema: str | StructType
 ) -> DataFrame:

@@ -273,11 +273,7 @@ def materialize_changes(
     for name in os.listdir(out_base):
         if name.startswith("_staging-"):
             shutil.rmtree(os.path.join(out_base, name), ignore_errors=True)
-    done = {
-        int(name.split("-", 1)[1])
-        for name in os.listdir(out_base)
-        if name.startswith("cv-")
-    }
+    done = set(_change_versions(table_path))
     from pyspark.sql import functions as F
 
     new: list[int] = []
@@ -314,8 +310,14 @@ def changes_glob(table_path: str) -> str:
     return os.path.join(table_path, CHANGES_DIR, "cv-*")
 
 
+def _change_versions(table_path: str) -> list[int]:
+    """Sorted versions N with a materialized ``_changes/cv-N`` batch."""
+    names = os.listdir(os.path.join(table_path, CHANGES_DIR))
+    return sorted(int(n[3:]) for n in names if n.startswith("cv-"))
+
+
 def read_changes_stream(
-    spark: SparkSession, table_path: str, schema=None, **options
+    spark: SparkSession, table_path: str, **options
 ) -> DataFrame:
     """STREAMING consumer of the materialized change feed: a file
     stream over ``_changes/cv-*`` — each newly materialized commit
@@ -326,10 +328,12 @@ def read_changes_stream(
     plain names). This is the versioned layer's ``readStream``
     CDC surface: downstream materialized views fold each batch by
     ``_commit_version`` order (see incremental_agg_via_changes for
-    the batch twin of that fold). Pass ``schema`` in production —
-    inferring it here costs a batch listing of the feed."""
-    if schema is None:
-        schema = spark.read.parquet(changes_glob(table_path)).schema
+    the batch twin of that fold). The schema comes from the footer of
+    the lowest ``cv-N`` batch: no inference job over the feed."""
+    from eco_pulse_lakehouse_spark.streaming.pipeline import footer_schema
+
+    cv = _change_versions(table_path)[0]
+    schema = footer_schema(os.path.join(table_path, CHANGES_DIR, f"cv-{cv}"))
     return (
         spark.readStream.schema(schema)
         .options(**options)

@@ -252,21 +252,27 @@ def read_last_epoch(
     return _read_partials(spark, root, ids[-1:])
 
 
+def footer_schema(directory: str) -> StructType:
+    """The Spark schema the writer recorded in the parquet footer of
+    the first part file of ``directory`` (every Spark parquet write
+    lands at least one part file, an empty one included), read on
+    the driver — no Spark job, no ``_spark_metadata`` probe."""
+    part = min(f for f in os.listdir(directory) if f.endswith(".parquet"))
+    footer = pq.read_schema(os.path.join(directory, part)).metadata
+    return StructType.fromJson(
+        json.loads(footer[b"org.apache.spark.sql.parquet.row.metadata"])
+    )
+
+
 def _read_partials(
     spark: SparkSession, root: str, ids: list[int]
 ) -> DataFrame:
-    """Read the partial directories of ``ids`` with the Spark schema
-    the writer recorded in the first one's parquet footer (every
-    partial holds at least one part file, an empty batch included).
-    Known schema and explicit leaf directories: no footer-inference
-    job, no partition column, and no ``_spark_metadata`` probe."""
+    """Read the partial directories of ``ids`` with the schema in the
+    first one's footer. Known schema and explicit leaf directories:
+    no footer-inference job, no partition column, and no
+    ``_spark_metadata`` probe."""
     dirs = [os.path.join(root, f"epoch={e}") for e in ids]
-    part = min(f for f in os.listdir(dirs[0]) if f.endswith(".parquet"))
-    footer = pq.read_schema(os.path.join(dirs[0], part)).metadata
-    schema = StructType.fromJson(
-        json.loads(footer[b"org.apache.spark.sql.parquet.row.metadata"])
-    )
-    return spark.read.schema(schema).parquet(*dirs)
+    return spark.read.schema(footer_schema(dirs[0])).parquet(*dirs)
 
 
 def _run_available(writer: DataStreamWriter) -> StreamingQuery:

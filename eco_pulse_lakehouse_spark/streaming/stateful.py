@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from eco_pulse_lakehouse_spark.session import pin
 from eco_pulse_lakehouse_spark.streaming.pipeline import drain, write_epoch
 
 
@@ -217,7 +218,7 @@ def foreach_batch_upsert(
                 merged = upsert(current, batch, keys)
             else:
                 merged = batch
-            staged = merged.localCheckpoint(eager=True)
+            staged = pin(merged)
             (
                 staged.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")

@@ -12,6 +12,7 @@ from eco_pulse_lakehouse_spark.operators.sampling import (
     deterministic_sample,
     hash_split,
 )
+from eco_pulse_lakehouse_spark.session import pin
 
 SF = "/root/testdata/sf0.001"
 
@@ -540,13 +541,38 @@ def test_release_cached_state_unpersists_every_pin(spark):
     _sys.path.insert(0, __file__.rsplit("/tests/", 1)[0])
     from bench import release_cached_state
 
-    pinned = [
-        spark.range(1000 * (i + 1)).localCheckpoint(eager=True)
-        for i in range(3)
-    ]
+    pinned = [pin(spark.range(1000 * (i + 1))) for i in range(3)]
     for df in pinned:
         assert df.count() > 0
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    assert jmap.size() >= 3, "localCheckpoint should register pins"
+    assert jmap.size() >= 3, "pin should register persistent RDDs"
     release_cached_state(spark)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+
+
+def test_pin_materializes_at_call_and_cuts_the_source(spark, tmp_path):
+    """The pin contract (session.pin): the build runs at CALL time
+    (>=1 job, counted under a job group set around the call), the
+    pinned frame plans as a LogicalRDD over the pinned blocks, and it
+    keeps returning the same rows after its parquet source is gone."""
+    import shutil
+    import uuid
+
+    src = str(tmp_path / "src")
+    spark.range(100).write.parquet(src)
+    df = spark.read.parquet(src)
+    expected = sorted(r.id for r in df.collect())
+    sc = spark.sparkContext
+    group = f"pin-test-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "pin")
+    try:
+        pinned = pin(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1
+    plan = pinned._jdf.queryExecution().logical()
+    assert plan.getClass().getSimpleName() == "LogicalRDD"
+    shutil.rmtree(src)
+    assert sorted(r.id for r in pinned.collect()) == expected
+    assert len(expected) == 100

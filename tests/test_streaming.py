@@ -328,6 +328,41 @@ def test_drain_policy_lives_in_pipeline():
     assert not offenders, offenders
 
 
+def test_pin_policy_lives_in_session():
+    """Grep gate: ``session.pin`` is the only ``.localCheckpoint(`` in
+    the package, bench.py and tools/, and the retired private pin
+    wrapper of operators/dedup.py is neither defined nor imported
+    anywhere (package, bench.py, tools/, tests/)."""
+    import re
+
+    from eco_pulse_lakehouse_spark import session
+
+    pkg = os.path.dirname(os.path.abspath(session.__file__))
+    repo = os.path.dirname(pkg)
+    pin_home = os.path.abspath(session.__file__)
+    private_pin = re.compile(r"\b_pin\b")
+
+    def py_files(root):
+        for d, _, files in os.walk(root):
+            yield from (os.path.join(d, f) for f in files if f.endswith(".py"))
+
+    raw, private = [], []
+    gated = {*py_files(pkg), *py_files(os.path.join(repo, "tools"))}
+    gated.add(os.path.join(repo, "bench.py"))
+    for path in [*gated, *py_files(os.path.join(repo, "tests"))]:
+        with open(path, encoding="utf-8") as fh:
+            for n, line in enumerate(fh, 1):
+                where = f"{os.path.relpath(path, repo)}:{n}"
+                if path in gated and path != pin_home and (
+                    ".localCheckpoint(" in line
+                ):
+                    raw.append(where)
+                if private_pin.search(line):
+                    private.append(where)
+    assert not raw, raw
+    assert not private, private
+
+
 def test_scratch_root_removed_at_exit(tmp_path):
     """Uuid scratch paths (corpus/_registry.py:scratch) live under one
     per-process root that is gone once the interpreter exits, files

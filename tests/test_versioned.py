@@ -283,16 +283,19 @@ def test_read_changes_stream_restart_is_exactly_once(spark):
     """A checkpointed consumer drains each commit batch exactly once
     across restarts: drain, commit more, drain AGAIN over the SAME
     checkpoint — the second drain must deliver only the new commit's
-    rows, and the union of both drains equals the whole feed."""
+    rows, and the union of both drains equals the whole feed. The
+    stream takes its schema from the first batch's footer: it equals
+    the schema a batch read of the feed infers."""
     path, out = _tmp(), _tmp()
     sink, ck = os.path.join(out, "sink"), os.path.join(out, "ck")
     versioned.write_version(spark.range(4), path)
     versioned.materialize_changes(spark, path)
-    schema = spark.read.parquet(versioned.changes_glob(path)).schema
+    inferred = spark.read.parquet(versioned.changes_glob(path)).schema
+    assert versioned.read_changes_stream(spark, path).schema == inferred
 
     def drain():
         q = (
-            versioned.read_changes_stream(spark, path, schema=schema)
+            versioned.read_changes_stream(spark, path)
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ck)
@@ -307,6 +310,7 @@ def test_read_changes_stream_restart_is_exactly_once(spark):
     versioned.materialize_changes(spark, path)
     drain()
     drained = spark.read.parquet(sink)
+    assert drained.schema == inferred
     assert drained.count() == 4 + 5  # second drain adds ONLY cv-1
     feed = spark.read.parquet(versioned.changes_glob(path))
     assert drained.exceptAll(feed).count() == 0

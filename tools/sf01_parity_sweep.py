@@ -159,7 +159,7 @@ def main() -> None:
         n_bad += not ok
         # release pins between entries (the r12 bench hygiene —
         # 342 entries in one JVM otherwise accumulate every
-        # localCheckpoint block; see SCALE.md "Pin RELEASE")
+        # pinned block; see SCALE.md "Pin RELEASE")
         from bench import release_cached_state
 
         release_cached_state(spark)

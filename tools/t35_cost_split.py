@@ -38,7 +38,10 @@ from eco_pulse_lakehouse_spark.operators.components import (  # noqa: E402
 from eco_pulse_lakehouse_spark.operators.dedup import (  # noqa: E402
     word_shingles,
 )
-from eco_pulse_lakehouse_spark.session import get_session  # noqa: E402
+from eco_pulse_lakehouse_spark.session import get_session, pin  # noqa: E402
+from eco_pulse_lakehouse_spark.streaming import pipeline as sp  # noqa: E402
+
+_LABELS = "id BIGINT, comp BIGINT"
 
 
 def main() -> None:
@@ -91,29 +94,26 @@ def main() -> None:
         batch_df = spark.read.schema(docs.schema).parquet(path)
         rec: dict = {"batch": batch_id}
 
+        sh = batch_df.select(
+            F.col("doc_id").alias("id"),
+            F.array_distinct(word_shingles(F.col("text"), 3)).alias("__shs"),
+        ).select(
+            "id",
+            F.size("__shs").alias("sz"),
+            F.explode("__shs").alias("__s"),
+        )
+
         def p1():
-            sh = batch_df.select(
-                F.col("doc_id").alias("id"),
-                F.array_distinct(
-                    word_shingles(F.col("text"), 3)
-                ).alias("__shs"),
-            ).select(
-                "id",
-                F.size("__shs").alias("sz"),
-                F.explode("__shs").alias("__s"),
-            )
-            sh.write.mode("overwrite").parquet(
-                os.path.join(idx_root, f"epoch={batch_id}")
-            )
+            sp.write_epoch(sh, idx_root, batch_id)
 
         rec["index_write_sec"], rec["index_write_jobs"] = timed("idx", p1)
 
         pair_box = {}
 
         def p2():
-            full = spark.read.parquet(os.path.join(idx_root, "epoch=*"))
-            bat = spark.read.parquet(
-                os.path.join(idx_root, f"epoch={batch_id}")
+            full = sp.read_epochs(spark, idx_root, before=batch_id + 1)
+            bat = sp.read_last_epoch(
+                spark, idx_root, sh.schema, before=batch_id + 1
             )
             cand = full.select(
                 F.col("id").alias("__ia"),
@@ -156,7 +156,7 @@ def main() -> None:
                 .filter(F.col("__j") >= F.lit(0.2))
                 .select("id_a", "id_b")
             )
-            pair_box["pairs"] = new_pairs.localCheckpoint(eager=True)
+            pair_box["pairs"] = pin(new_pairs)
             pair_box["n"] = pair_box["pairs"].count()
 
         rec["pair_discovery_sec"], rec["pair_discovery_jobs"] = timed(
@@ -165,18 +165,13 @@ def main() -> None:
         rec["n_new_pairs"] = pair_box["n"]
 
         def p3():
-            if batch_id:
-                prior = spark.read.parquet(
-                    os.path.join(state_root, f"epoch={batch_id - 1}")
-                )
-            else:
-                prior = spark.createDataFrame(
-                    [], "id BIGINT, comp BIGINT"
-                )
-            incremental_components_update(
-                prior, pair_box["pairs"]
-            ).write.mode("overwrite").parquet(
-                os.path.join(state_root, f"epoch={batch_id}")
+            prior = sp.read_last_epoch(
+                spark, state_root, _LABELS, before=batch_id
+            )
+            sp.write_epoch(
+                incremental_components_update(prior, pair_box["pairs"]),
+                state_root,
+                batch_id,
             )
 
         rec["label_merge_sec"], rec["label_merge_jobs"] = timed(

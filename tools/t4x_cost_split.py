@@ -48,7 +48,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from eco_pulse_lakehouse_spark.catalog import load_table  # noqa: E402
-from eco_pulse_lakehouse_spark.session import get_session  # noqa: E402
+from eco_pulse_lakehouse_spark.session import get_session, pin  # noqa: E402
 
 
 def _fit(points):
@@ -187,14 +187,8 @@ def _run_t52(spark, sf_dir, docs, timed, floor_sec, base):
     # --- the serve stream: fixed + slope*n_requests over the pinned
     # merged artifacts (t49 discipline: one materialization, many
     # request batches) --------------------------------------------
-    postings_full = term_postings(docs, "doc_id", "text").localCheckpoint(
-        eager=True
-    )
-    store_full = (
-        int8_store(e)
-        .select("vec_id", "q_vec", "__n8")
-        .localCheckpoint(eager=True)
-    )
+    postings_full = pin(term_postings(docs, "doc_id", "text"))
+    store_full = pin(int8_store(e).select("vec_id", "q_vec", "__n8"))
     queries = list(_ns._BM25_QUERIES)
 
     def serve(batch, sink):
@@ -228,12 +222,8 @@ def _run_t52(spark, sf_dir, docs, timed, floor_sec, base):
             F.col("doc_id").cast("bigint").alias("doc_id"), "text"
         )
         ce = load_table(spark, cdir, "embeddings")
-        cp = term_postings(cd, "doc_id", "text").localCheckpoint(eager=True)
-        cs = (
-            int8_store(ce)
-            .select("vec_id", "q_vec", "__n8")
-            .localCheckpoint(eager=True)
-        )
+        cp = pin(term_postings(cd, "doc_id", "text"))
+        cs = pin(int8_store(ce).select("vec_id", "q_vec", "__n8"))
 
         def cserve(sink, cd=cd, ce=ce, cp=cp, cs=cs):
             hybrid_serving(
